@@ -208,6 +208,26 @@ def calib_spark(spark) -> float:
     return round(best, 3)
 
 
+def qbf_tokens(stats: dict[str, list[float]], div: int) -> str:
+    """Front-code {"q_<name>": [best, median]} as the FINAL line's qbf
+    string (see main): one token per row, sorted by name, each a base-36
+    common-prefix length with the previous name, the name's suffix and
+    ':best' in integer centiseconds (div=1) or deciseconds (div=10),
+    rounded to nearest."""
+    toks, prev = [], ""
+    for name in sorted(q[2:] for q in stats):
+        lcp = 0
+        while (lcp < min(len(prev), len(name), 35)
+               and prev[lcp] == name[lcp]):
+            lcp += 1
+        v = round(stats["q_" + name][0] * 100 / div)
+        toks.append(
+            f"{'0123456789abcdefghijklmnopqrstuvwxyz'[lcp]}"
+            f"{name[lcp:]}:{v}")
+        prev = name
+    return " ".join(toks)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
@@ -358,22 +378,11 @@ def main() -> None:
     # BENCH_r*_local.json artifacts). If values outgrow the budget the
     # encoding drops to integer deciseconds and says so via "qv".
     def qbf_line(div: int, qv: str) -> str:
-        toks, prev = [], ""
-        for name in sorted(q[2:] for q in stats):
-            lcp = 0
-            while (lcp < min(len(prev), len(name), 35)
-                   and prev[lcp] == name[lcp]):
-                lcp += 1
-            v = round(stats["q_" + name][0] * 100) // div
-            toks.append(
-                f"{'0123456789abcdefghijklmnopqrstuvwxyz'[lcp]}"
-                f"{name[lcp:]}:{v}")
-            prev = name
         return json.dumps({
             "metric": "headline_total_best_of_3",
             "value": total,
             "unit": "sec",
-            "qbf": " ".join(toks),
+            "qbf": qbf_tokens(stats, div),
             "qv": qv,
             "sf": sf,
             "calib_spark_sec": calibs,

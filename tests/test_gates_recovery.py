@@ -25,6 +25,8 @@ import subprocess
 import sys
 from pathlib import Path
 
+from bench import qbf_tokens
+
 REPO = Path(__file__).resolve().parent.parent
 
 HEADLINE8 = [
@@ -35,22 +37,13 @@ HEADLINE8 = [
 
 
 def _qbf_line(stats: dict, total: float) -> str:
-    """Mirror bench.py's r12 front-coded FINAL line exactly."""
-    b36 = "0123456789abcdefghijklmnopqrstuvwxyz"
+    """Mirror bench.py's r12 front-coded FINAL line, tokens encoded by
+    bench.py itself."""
 
     def render(div: int, qv: str) -> str:
-        toks, prev = [], ""
-        for name in sorted(q[2:] for q in stats):
-            lcp = 0
-            while (lcp < min(len(prev), len(name), 35)
-                   and prev[lcp] == name[lcp]):
-                lcp += 1
-            v = round(stats["q_" + name][0] * 100) // div
-            toks.append(f"{b36[lcp]}{name[lcp:]}:{v}")
-            prev = name
         return json.dumps({
             "metric": "headline_total_best_of_3", "value": total,
-            "unit": "sec", "qbf": " ".join(toks), "qv": qv,
+            "unit": "sec", "qbf": qbf_tokens(stats, div), "qv": qv,
             "sf": 0.1, "calib_spark_sec": 0.252, "compact": True,
             "final": True, "n_benched": len(stats),
         }, separators=(",", ":"))
@@ -229,3 +222,15 @@ def test_recovered_map_payload_merges_with_finals(tmp_path):
     rc, out = _run_gates(artifact, tmp_path)
     assert rc == 0, out
     assert "q_extra_000" in out, out
+
+
+def test_qbf_deciseconds_round_to_nearest():
+    """bench.py's decisecond fallback rounds to nearest, not down:
+    0.19 s encodes as 2 ds, not 1 (0.09 s low)."""
+    stats = {"q_agg_hash": [0.19, 0.2], "q_agg_sum": [0.14, 0.15],
+             "q_pivot": [1.96, 2.0]}
+    assert qbf_tokens(stats, 10) == "0agg_hash:2 4sum:1 0pivot:20"
+    assert qbf_tokens(stats, 1) == "0agg_hash:19 4sum:14 0pivot:196"
+    for i in range(0, 3000, 7):
+        ds = int(qbf_tokens({"q_x": [i / 1000, 0.0]}, 10).split(":")[1])
+        assert abs(ds / 10 - i / 1000) <= 0.05 + 1e-9, i
