@@ -16,8 +16,10 @@ simple propagation is exact and sufficient at near-dup densities.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .fixpoint import fixpoint
 
 
 def connected_components(nodes: DataFrame, edges: DataFrame,
@@ -27,7 +29,8 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     """Label every node with the min node id reachable from it.
 
     nodes: one column ``id_col``; edges: ``src``/``dst`` (undirected —
-    both directions generated here). Returns (id, cluster).
+    both directions generated here). Returns (id, cluster). Raises
+    RuntimeError if labels still move after ``max_iter`` rounds.
 
     broadcast_labels: ship the label vector to the edge partitions each
     round so the materialized edge relation is never re-shuffled — one
@@ -50,10 +53,9 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     # overwhelming majority of a deduped corpus) are their own cluster
     # by definition and skip the iterative phase entirely.
     touched = both.select(F.col("a").alias("id")).distinct()
-    labels = touched.select("id", F.col("id").alias("cluster"))
-    changed = -1  # ADVICE r11: max_iter <= 0 must hit the warning, not
-    #               a NameError on the loop variable
-    for _i in range(max_iter):
+
+    def _round(labels, i):
+        labels = labels.select("id", "cluster")
         # Pointer doubling (path compression) BEFORE the hop
         # (optimization round r11): label(v) <- min(label(v),
         # label(label(v))). Every label is itself a touched node id
@@ -68,7 +70,7 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
         # point (the min reachable id), strictly fewer checkpoint
         # jobs. Rounds are the dominant cost of every CC consumer at
         # bench scale (measured: q_dbscan 5 -> 3 rounds).
-        if _i > 0:  # round 0's labels are own ids — doubling is a no-op
+        if i > 0:  # round 0's labels are own ids — doubling is a no-op
             lut = labels.select(
                 F.col("id").alias("_lid"), F.col("cluster").alias("_lcl"))
             if broadcast_labels:
@@ -87,41 +89,28 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
                         .agg(F.min("cluster").alias("nbr_min")))
         if broadcast_labels:
             neighbor_min = F.broadcast(neighbor_min)
-        # The convergence count rides the round's OWN materialization
-        # as an observed metric (optimization round r11, second pass):
-        # Observation fires on the eager localCheckpoint, so each round
-        # is exactly ONE scheduled job — the first r11 pass had already
-        # folded the re-join out of the count by carrying _prev through
-        # the checkpoint (1.2-1.4x on q_dbscan / q_er_clusters at
-        # sf0.1); this removes the remaining per-round count job
-        # (~0.1-0.2 s of pure job overhead at near-dup sizes).
-        obs = Observation(f"cc_changed_{_i}")
-        new_labels = (labels.join(neighbor_min, "id", "left")
-                      .select("id",
-                              F.least(F.col("cluster"),
-                                      F.coalesce("nbr_min", F.col("cluster")))
-                              .alias("cluster"),
-                              F.col("cluster").alias("_prev"))
-                      .observe(obs, F.count(
-                          F.when(F.col("cluster") != F.col("_prev"), 1))
-                          .alias("chg"))
-                      .localCheckpoint(eager=True))
-        changed = obs.get["chg"]
-        labels = new_labels.select("id", "cluster")
-        if changed == 0:
-            break
-    else:
-        # max_iter exhausted with labels still moving: the output is NOT
-        # the transitive closure (a component with diameter > max_iter
-        # stays split), and an oracle mismatch downstream would otherwise
-        # have nothing pointing here. min-label propagation needs one
-        # round per hop of the longest min-label path.
-        import warnings
-        warnings.warn(
-            f"connected_components: {changed} labels still changing after "
-            f"max_iter={max_iter} rounds — result is not converged; raise "
-            "max_iter (component diameter exceeds it)",
-            RuntimeWarning, stacklevel=2)
+        return (labels.join(neighbor_min, "id", "left")
+                .select("id",
+                        F.least(F.col("cluster"),
+                                F.coalesce("nbr_min", F.col("cluster")))
+                        .alias("cluster"),
+                        F.col("cluster").alias("_prev")))
+
+    # The convergence count rides the round's OWN materialization as an
+    # observed metric (optimization round r11, second pass), so each
+    # round is exactly ONE scheduled job — the first r11 pass had
+    # already folded the re-join out of the count by carrying _prev
+    # through the checkpoint (1.2-1.4x on q_dbscan / q_er_clusters at
+    # sf0.1); this removes the remaining per-round count job (~0.1-0.2 s
+    # of pure job overhead at near-dup sizes). Exhausting max_iter with
+    # labels still moving raises: the output would NOT be the
+    # transitive closure (a component with diameter > max_iter stays
+    # split).
+    labels = fixpoint(
+        touched.select("id", F.col("id").alias("cluster")), _round, max_iter,
+        observe=(F.count(F.when(F.col("cluster") != F.col("_prev"), 1))
+                 .alias("chg"),),
+        changed=lambda s, _: s["chg"]).select("id", "cluster")
     isolated = (nodes.select(F.col(id_col).alias("id"))
                 .join(touched, "id", "left_anti")
                 .select("id", F.col("id").alias("cluster")))

@@ -15,6 +15,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from .functions.hashsafe import dsum, davg, sql_davg
+from .operators.fixpoint import fixpoint
 from .registry import query
 from .sources.fixtures import load_table
 from .session import fan_out_scan
@@ -986,17 +987,19 @@ def q_markov_attribution(spark, sf_dir):
               .persist())
     v = scen.select("scenario", F.lit("S").alias("state"),
                     F.lit(1).cast("decimal(10,8)").alias("mass"))
-    for i in range(_MK_STEPS):
+
+    def _step(v, _):
         vv, pp = v.alias("vv"), sprobs.alias("pp")
-        v = (vv.join(pp, (F.col("pp.scenario") == F.col("vv.scenario"))
-                     & (F.col("pp.src") == F.col("vv.state")))
-             .groupBy(F.col("pp.scenario").alias("scenario"),
-                      F.col("pp.dst").alias("state"))
-             .agg(F.round(F.sum(F.col("vv.mass") * F.col("pp.p"))
-                          .cast("double"), 8).cast("decimal(10,8)")
-                  .alias("mass")))
-        if (i + 1) % 4 == 0:
-            v = v.localCheckpoint(eager=True)
+        return (vv.join(pp, (F.col("pp.scenario") == F.col("vv.scenario"))
+                        & (F.col("pp.src") == F.col("vv.state")))
+                .groupBy(F.col("pp.scenario").alias("scenario"),
+                         F.col("pp.dst").alias("state"))
+                .agg(F.round(F.sum(F.col("vv.mass") * F.col("pp.p"))
+                             .cast("double"), 8).cast("decimal(10,8)")
+                     .alias("mass")))
+
+    v = fixpoint(v, _step, _MK_STEPS, every=4)
+    sprobs.unpersist()  # the final v is materialized; nothing re-reads it
     pc = (v.groupBy("scenario")
           .agg(F.round(F.coalesce(
               F.max(F.when(F.col("state") == "C", F.col("mass"))),
@@ -1283,12 +1286,12 @@ def q_huber_regression(spark, sf_dir):
     # IRLS chain TWICE more (hub's left side + inside dw's broadcast)
     # — ~9 sequential passes over the cached obs where the algorithm
     # needs 5. Each checkpoint materializes one row.
-    coef = s0.select(
+    ols = s0.select(
         b1_0.alias("b1"),
         F.round((F.col("sy") - b1_0 * F.col("sx")) / F.col("n"), 10)
         .alias("b0")).localCheckpoint(eager=True)
-    ols = coef
-    for _ in range(_HUBER_ITERS):
+
+    def _irls(coef, _):
         r = F.col("y") - F.col("b0") - F.col("b1") * F.col("x")
         w = F.round(F.when(F.abs(r) <= 5.0, 1.0)
                     .otherwise(5.0 / F.abs(r)), 10)
@@ -1308,11 +1311,14 @@ def q_huber_regression(spark, sf_dir):
                        - F.col("swx") * F.col("swy"))
                       / (F.col("sw") * F.col("swxx")
                          - F.col("swx") * F.col("swx")), 10)
-        coef = sk.select(
+        return sk.select(
             b1k.alias("b1"),
             F.round((F.col("swy") - b1k * F.col("swx")) / F.col("sw"),
                     10).alias("b0"))
-    coef = coef.localCheckpoint(eager=True)
+
+    # the rounds stay one lazy chain; only the final coefficients are
+    # materialized
+    coef = fixpoint(ols, _irls, _HUBER_ITERS, every=_HUBER_ITERS)
     rfin = F.col("y") - F.col("b0") - F.col("b1") * F.col("x")
     dw = (obs.crossJoin(F.broadcast(coef))
           .filter(F.abs(rfin) > 5.0)

@@ -24,6 +24,9 @@ BPE trainers scale: the dict, not the corpus, is the working set.
 
 from __future__ import annotations
 
+import functools
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .registry import query
@@ -82,13 +85,13 @@ def _bpe_oracle(n_merges: int = N_MERGES) -> str:
     return f"{_bpe_chain(n_merges)}\n{sel}\nORDER BY it"
 
 
-@query("q_bpe_train", oracle=_bpe_oracle())
-def q_bpe_train(spark, sf_dir):
-    """Learn the first five BPE merges from the documents corpus (see
-    module docstring for representation, tie-breaks, and the 100 TB
-    shape). The DuckDB oracle re-learns them with the identical
-    five-stage CTE chain, so the learned TABLE — pairs, merged tokens,
-    and weighted counts — is value-hash-checked end to end."""
+def _vocab(spark, sf_dir):
+    """The corpus word-frequency dict as '|'-delimited token strings
+    (rep, n), materialized ONCE (optimization round r12, guide §5):
+    every merge level's pair aggregation otherwise re-derives the full
+    corpus explode + groupBy through the lazy tok lineage — 5 corpus
+    passes per run. After the checkpoint each level's work is
+    vocab-sized."""
     d = load_table(spark, sf_dir, "documents")
     # fan the single-row-group scan out before tokenize + partial agg
     # (optimization round r11)
@@ -96,48 +99,56 @@ def q_bpe_train(spark, sf_dir):
     words = (d.select(F.explode(F.split("text", " ")).alias("w"))
              .filter(F.col("w").rlike("^[a-z]+$"))
              .groupBy("w").agg(F.count("*").alias("n")))
-    # materialize the |vocab|-sized word-count relation ONCE
-    # (optimization round r12, guide §5): every merge level's pair
-    # aggregation re-derived the full corpus explode + groupBy through
-    # the lazy tok lineage — 5 corpus passes per run (hidden before the
-    # r12 bench cache hygiene by the warmup rep's persisted best_i
-    # fragments). After the checkpoint each level's work is vocab-sized.
-    tok = words.select(
+    return words.select(
         F.concat(F.lit("|"),
                  F.regexp_replace("w", "(.)", "$1|")).alias("rep"),
         "n").localCheckpoint(eager=True)
 
+
+def _best_pair(tok):
+    """The (count DESC, pair ASC) argmax adjacent pair (t1, t2, cnt)."""
+    toks = F.filter(F.split("rep", r"\|"), lambda x: x != "")
+    pairs = (tok.select(
+        F.explode(F.arrays_zip(
+            F.slice(toks, 1, F.size(toks) - 1).alias("a"),
+            F.slice(toks, 2, F.size(toks) - 1).alias("b"),
+        )).alias("pr"), "n")
+        .select(F.col("pr.a").alias("t1"), F.col("pr.b").alias("t2"), "n")
+        .groupBy("t1", "t2").agg(F.sum("n").alias("cnt")))
+    return pairs.orderBy(F.desc("cnt"), "t1", "t2").limit(1)
+
+
+def _merge(tok, best):
+    """Merge best's (t1, t2) pair in every token string (two replace
+    passes catch the boundary-sharing second occurrence)."""
+    b = best.select(F.col("t1").alias("_t1"), F.col("t2").alias("_t2"))
+    pat = F.concat(F.lit("|"), F.col("_t1"), F.lit("|"),
+                   F.col("_t2"), F.lit("|"))
+    rep2 = F.concat(F.lit("|"), F.col("_t1"), F.col("_t2"), F.lit("|"))
+    return (tok.join(F.broadcast(b))
+            .select(F.replace(F.replace("rep", pat, rep2), pat, rep2)
+                    .alias("rep"), "n"))
+
+
+@query("q_bpe_train", oracle=_bpe_oracle())
+def q_bpe_train(spark, sf_dir):
+    """Learn the first five BPE merges from the documents corpus (see
+    module docstring for representation, tie-breaks, and the 100 TB
+    shape). The DuckDB oracle re-learns them with the identical
+    five-stage CTE chain, so the learned TABLE — pairs, merged tokens,
+    and weighted counts — is value-hash-checked end to end."""
+    tok = _vocab(spark, sf_dir)
     results = []
     for i in range(1, N_MERGES + 1):
-        toks = F.filter(F.split("rep", r"\|"), lambda x: x != "")
-        pairs = (tok.select(
-            F.explode(F.arrays_zip(
-                F.slice(toks, 1, F.size(toks) - 1).alias("a"),
-                F.slice(toks, 2, F.size(toks) - 1).alias("b"),
-            )).alias("pr"), "n")
-            .select(F.col("pr.a").alias("t1"), F.col("pr.b").alias("t2"),
-                    "n")
-            .groupBy("t1", "t2").agg(F.sum("n").alias("cnt")))
-        best = (pairs.orderBy(F.desc("cnt"), "t1", "t2").limit(1)
+        best = (_best_pair(tok)
                 .select("t1", "t2", F.col("cnt").cast("bigint").alias("cnt"))
                 .persist())
         results.append(best.select(
             F.lit(i).alias("it"), "t1", "t2",
             F.concat("t1", "t2").alias("merged"), "cnt"))
-        pat = F.concat(F.lit("|"), F.col("_t1"), F.lit("|"),
-                       F.col("_t2"), F.lit("|"))
-        rep2 = F.concat(F.lit("|"), F.col("_t1"), F.col("_t2"),
-                        F.lit("|"))
-        b = best.select(F.col("t1").alias("_t1"),
-                        F.col("t2").alias("_t2"))
-        tok = (tok.join(F.broadcast(b))
-               .select(F.replace(F.replace("rep", pat, rep2),
-                                 pat, rep2).alias("rep"), "n"))
+        tok = _merge(tok, best)
 
-    out = results[0]
-    for r in results[1:]:
-        out = out.unionAll(r)
-    return out
+    return functools.reduce(DataFrame.unionAll, results)
 
 
 def _bpe_apply_oracle(n_merges: int = N_MERGES) -> str:
@@ -171,38 +182,9 @@ def q_bpe_apply(spark, sf_dir):
 
     Scale: identical to q_bpe_train + one final map-side-combined
     aggregate over the |vocab|-sized dict."""
-    d = load_table(spark, sf_dir, "documents")
-    # fan the single-row-group scan out before tokenize + partial agg
-    # (optimization round r11)
-    d = fan_out_scan(d, "doc_id")
-    words = (d.select(F.explode(F.split("text", " ")).alias("w"))
-             .filter(F.col("w").rlike("^[a-z]+$"))
-             .groupBy("w").agg(F.count("*").alias("n")))
-    # same one-shot vocab materialization as q_bpe_train (r12): each
-    # merge level otherwise re-derives the corpus explode + groupBy
-    tok = words.select(
-        F.concat(F.lit("|"),
-                 F.regexp_replace("w", "(.)", "$1|")).alias("rep"),
-        "n").localCheckpoint(eager=True)
+    tok = _vocab(spark, sf_dir)
     for _ in range(N_MERGES):
-        toks = F.filter(F.split("rep", r"\|"), lambda x: x != "")
-        pairs = (tok.select(
-            F.explode(F.arrays_zip(
-                F.slice(toks, 1, F.size(toks) - 1).alias("a"),
-                F.slice(toks, 2, F.size(toks) - 1).alias("b"),
-            )).alias("pr"), "n")
-            .select(F.col("pr.a").alias("t1"), F.col("pr.b").alias("t2"),
-                    "n")
-            .groupBy("t1", "t2").agg(F.sum("n").alias("cnt")))
-        b = (pairs.orderBy(F.desc("cnt"), "t1", "t2").limit(1)
-             .select(F.col("t1").alias("_t1"), F.col("t2").alias("_t2")))
-        pat = F.concat(F.lit("|"), F.col("_t1"), F.lit("|"),
-                       F.col("_t2"), F.lit("|"))
-        rep2 = F.concat(F.lit("|"), F.col("_t1"), F.col("_t2"),
-                        F.lit("|"))
-        tok = (tok.join(F.broadcast(b))
-               .select(F.replace(F.replace("rep", pat, rep2),
-                                 pat, rep2).alias("rep"), "n"))
+        tok = _merge(tok, _best_pair(tok))
 
     toks = F.filter(F.split("rep", r"\|"), lambda x: x != "")
     nch = F.length(F.replace("rep", F.lit("|"), F.lit("")))

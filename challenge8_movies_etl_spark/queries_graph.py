@@ -15,11 +15,33 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from .operators.fixpoint import fixpoint, release
 from .operators.graph import label_propagation, pagerank, pagerank_oracle_sql
 from .registry import query
 from .sources.fixtures import load_table
 
-_EDGES_CTE = """
+def trade_graph(spark, sf_dir, keep=None):
+    """The customer-supplier trade graph as ``(pairs, edges)``: distinct
+    ``(c, s)`` pairs of customers that bought from suppliers (order
+    lines passing ``keep``), with disjointly encoded node ids
+    (customer=2k, supplier=2k+1), and their edge list in both
+    directions as ``(src, dst)`` — distinct by construction, since the
+    two directions differ in src parity."""
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    lines = o.join(li, o.o_orderkey == li.l_orderkey)
+    if keep is not None:
+        lines = lines.filter(keep)
+    pairs = (lines.select((F.col("o_custkey") * 2).alias("c"),
+                          (F.col("l_suppkey") * 2 + 1).alias("s"))
+             .distinct())
+    edges = (pairs.select(F.col("c").alias("src"), F.col("s").alias("dst"))
+             .unionByName(pairs.select(F.col("s").alias("src"),
+                                       F.col("c").alias("dst"))))
+    return pairs, edges
+
+
+TRADE_EDGES_CTE = """
     pairs AS (
       SELECT DISTINCT o.o_custkey * 2 AS c, l.l_suppkey * 2 + 1 AS s
       FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
@@ -30,7 +52,7 @@ _EDGES_CTE = """
       SELECT s, c FROM pairs
     )"""
 
-_PAGERANK_ORACLE = pagerank_oracle_sql(_EDGES_CTE, iterations=5) + """
+_PAGERANK_ORACLE = pagerank_oracle_sql(TRADE_EDGES_CTE, iterations=5) + """
     SELECT node,
            CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END
              AS kind,
@@ -51,19 +73,9 @@ def q_graph_pagerank(spark, sf_dir):
     (customer=2k, supplier=2k+1); ranks are decimal-exact, so the
     top-20 cut (ordered by rank desc, node) is deterministic on both
     engines."""
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = (o.join(li, o.o_orderkey == li.l_orderkey)
-             .select((F.col("o_custkey") * 2).alias("c"),
-                     (F.col("l_suppkey") * 2 + 1).alias("s"))
-             .distinct())
-    edges = (pairs.select(F.col("c").alias("src"), F.col("s").alias("dst"))
-             .unionByName(
-                 pairs.select(F.col("s").alias("src"),
-                              F.col("c").alias("dst"))))
-    # pairs is already distinct and the two directions are disjoint
-    # (src parity differs), so the edge list is distinct by
-    # construction — skip the operator's |E| dedup shuffle
+    _, edges = trade_graph(spark, sf_dir)
+    # the edge list is distinct by construction — skip the operator's
+    # |E| dedup shuffle
     ranks = pagerank(edges, iterations=5, assume_distinct=True)
     kind = F.when(F.col("node") % 2 == 0, "customer").otherwise("supplier")
     # round at the rank's IDENTITY precision (each iteration quantizes
@@ -339,57 +351,48 @@ def q_graph_components(spark, sf_dir):
                         .alias("v"))
                 .distinct())
 
-    cur = (edges.select(F.greatest(F.col("src"), F.col("dst")).alias("u"),
-                        F.least(F.col("src"), F.col("dst")).alias("v"))
-           .filter(F.col("u") != F.col("v"))
-           .distinct().localCheckpoint(eager=True))
+    cur0 = (edges.select(F.greatest(F.col("src"), F.col("dst")).alias("u"),
+                         F.least(F.col("src"), F.col("dst")).alias("v"))
+            .filter(F.col("u") != F.col("v"))
+            .distinct().localCheckpoint(eager=True))
     # Convergence check folded INTO the round's materialization
     # (optimization round r11, second pass): both relations are
     # DISTINCT sets, so  nxt == cur  ⟺  |nxt \ cur| = 0 ∧ |nxt| = |cur|.
     # A left join against cur tags each emitted row while the round's
     # checkpoint job runs anyway (AQE picks the tiny-side broadcast,
     # exactly as it did for the old standalone anti-join job), |cur| is
-    # tracked driver-side from the previous round's OBSERVED count, and
-    # both counts ride the checkpoint job as observed metrics
-    # (Observation fires on the eager localCheckpoint), so each round
-    # is exactly ONE scheduled job instead of checkpoint + a
-    # two-anti-join count over both relations. Measured 5.2-5.4 s →
-    # 4.3-4.7 s warm at sf0.1 (9 rounds, same round outputs).
-    from pyspark.sql import Observation
-    n_cur = cur.count()
-    cur_ck = cur  # materialized handle (cur itself may become a projection)
-    for _round in range(50):
-        obs = Observation(f"star_round_{_round}")
-        # (r12 rejected experiment: TWO alternations per checkpoint job
-        # — halving the job count — measured 3.79/3.87 best/median →
-        # 4.09/11.05 at matched calib; the doubled 6-exchange plan per
-        # job was slower and far noisier than the per-round jobs it
-        # saved. Reverted to one alternation per job.)
-        # Parent-pointer compression per round (optimization round
-        # r12, §2.4): re-point each child at min(parent, parent's min
-        # parent) via one broadcast lookup of the round's own output.
-        # Connectivity is preserved (the parent keeps its own row), v
-        # only decreases, and at the star-forest fixpoint the lookup
-        # misses every root so compression is the identity — same
-        # fixpoint, measured 9 -> 6 rounds (3.21 -> 2.92 s warm loop,
-        # larger cold).
-        nxt_ck = (_compress(_small_star(_large_star(cur)))
-                  .join(cur.select("u", "v", F.lit(1).alias("_old")),
-                        ["u", "v"], "left")
-                  .observe(obs, F.count(F.lit(1)).alias("n"),
-                           F.count(F.when(F.col("_old").isNull(), 1))
-                           .alias("n_new"))
-                  .localCheckpoint(eager=True))
-        stat = obs.get
-        changed = stat["n_new"] + abs(stat["n"] - n_cur)
-        cur_ck.unpersist()
-        cur_ck, cur = nxt_ck, nxt_ck.select("u", "v")
-        n_cur = stat["n"]
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError("components: star alternation did not "
-                           "converge in 50 rounds — raise the cap")
+    # the previous round's OBSERVED count, and both counts ride the
+    # checkpoint job as observed metrics, so each round is exactly ONE
+    # scheduled job instead of checkpoint + a two-anti-join count over
+    # both relations. Measured 5.2-5.4 s → 4.3-4.7 s warm at sf0.1
+    # (9 rounds, same round outputs).
+    # (r12 rejected experiment: TWO alternations per checkpoint job
+    # — halving the job count — measured 3.79/3.87 best/median →
+    # 4.09/11.05 at matched calib; the doubled 6-exchange plan per
+    # job was slower and far noisier than the per-round jobs it
+    # saved. Reverted to one alternation per job.)
+    # Parent-pointer compression per round (optimization round r12,
+    # §2.4): re-point each child at min(parent, parent's min parent)
+    # via one broadcast lookup of the round's own output. Connectivity
+    # is preserved (the parent keeps its own row), v only decreases,
+    # and at the star-forest fixpoint the lookup misses every root so
+    # compression is the identity — same fixpoint, measured 9 -> 6
+    # rounds (3.21 -> 2.92 s warm loop, larger cold).
+    n0 = cur0.count()
+
+    def _round(state, _):
+        cur = state.select("u", "v")
+        return (_compress(_small_star(_large_star(cur)))
+                .join(cur.select("u", "v", F.lit(1).alias("_old")),
+                      ["u", "v"], "left"))
+
+    cur = fixpoint(
+        cur0, _round, 50,
+        observe=(F.count(F.lit(1)).alias("n"),
+                 F.count(F.when(F.col("_old").isNull(), 1)).alias("n_new")),
+        changed=lambda s, p: (s["n_new"]
+                              + abs(s["n"] - (p["n"] if p else n0))))
+    release(cur0)
     # At the fixpoint `cur` is a star forest (u → component minimum);
     # minima themselves carry no outgoing edge, so label them with
     # their own id via the left join over the full node set.
@@ -412,7 +415,7 @@ def q_graph_components(spark, sf_dir):
     # was the last consumer of edges/cur — release them so a 450-query
     # sweep run doesn't accumulate executor storage (ADVICE r9)
     edges.unpersist()
-    cur_ck.unpersist()
+    release(cur)
     return (labels.groupBy(F.col("lab").alias("component"))
             .agg(F.count("*").alias("size"),
                  F.min("v").alias("min_node"),
@@ -579,17 +582,7 @@ def q_graph_label_prop(spark, sf_dir):
     flat, as in q_graph_components). The oracle unrolls the same 3
     rounds into chained CTEs, so this iterative algorithm is
     value-hash-checked, not rows-only."""
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = (o.join(li, o.o_orderkey == li.l_orderkey)
-             .filter(F.col("l_quantity") <= 2)
-             .select((F.col("o_custkey") * 2).alias("c"),
-                     (F.col("l_suppkey") * 2 + 1).alias("s"))
-             .distinct())
-    edges = (pairs.select(F.col("c").alias("src"), F.col("s").alias("dst"))
-             .unionByName(pairs.select(F.col("s").alias("src"),
-                                       F.col("c").alias("dst")))
-             .persist())
+    edges = trade_graph(spark, sf_dir, F.col("l_quantity") <= 2)[1].persist()
     labels = label_propagation(edges, iterations=_LPA_ITER)
     # labels is checkpointed every round inside the operator — the
     # returned rollup never re-reads edges (VERDICT r11 item 8)
@@ -781,17 +774,20 @@ def q_graph_hits(spark, sf_dir):
                         F.round(F.col("raw").cast("double") / F.col("t"),
                                 10).cast(_DEC_HA).alias("s")))
 
-    a = None
-    for i in range(_HITS_ITERS):
+    def _half_steps(state, _):
+        h = state[0]
         a = norm(edges.join(h, h.node == edges.src)
                  .groupBy(F.col("dst").alias("node"))
                  .agg(F.sum("s").alias("raw")))
         h = norm(edges.join(a, a.node == edges.dst)
                  .groupBy(F.col("src").alias("node"))
                  .agg(F.sum("s").alias("raw")))
-        if i % 2 == 1:
-            h = h.localCheckpoint(eager=True)
-            a = a.localCheckpoint(eager=True)
+        return h, a
+
+    # every second round is materialized; the last of the (odd)
+    # _HITS_ITERS rounds stays lazy inside the output plan
+    h, a = _half_steps(
+        fixpoint((h, None), _half_steps, _HITS_ITERS - 1, every=2), None)
     ranked = (h.select(F.lit("hub").alias("role"), "node", "s")
               .unionByName(a.select(F.lit("authority").alias("role"),
                                     "node", "s")))
@@ -889,25 +885,28 @@ def q_graph_sssp(spark, sf_dir):
              .unionByName(pairs.select(F.col("v").alias("src"),
                                        F.col("u").alias("dst"), "w"))
              .persist())
-    dist = (edges.agg(F.min("src").alias("node"))
-            .withColumn("dist", F.lit(0).cast("bigint")))
     # dist is |V|-bounded (tiny): broadcast it into every relax join
     # so the 1M-row edge relation never shuffles, and localCheckpoint
     # per round — without it the union+groupBy lineage references dist
     # twice per round and the DAG re-evaluates 2^rounds times (the
     # q_graph_components flattening rationale, measured 6.3s -> fixed)
-    dist = dist.localCheckpoint(eager=True)
-    for _ in range(_SSSP_ITERS):
+    dist0 = (edges.agg(F.min("src").alias("node"))
+             .withColumn("dist", F.lit(0).cast("bigint"))
+             .localCheckpoint(eager=True))
+
+    def _relax(dist, _):
         cand = (edges.join(F.broadcast(dist), dist.node == edges.src)
                 .select(F.col("dst").alias("node"),
                         (F.col("dist") + F.col("w")).alias("dist")))
-        dist = (dist.unionByName(cand)
-                .groupBy("node").agg(F.min("dist").alias("dist"))
-                .localCheckpoint(eager=True))
+        return (dist.unionByName(cand)
+                .groupBy("node").agg(F.min("dist").alias("dist")))
+
+    dist = fixpoint(dist0, _relax, _SSSP_ITERS)
     # the final dist is checkpointed — the returned sort never re-reads
-    # edges or ps, so release both caches (VERDICT r11 item 8)
+    # edges, ps or the seed, so release them (VERDICT r11 item 8)
     edges.unpersist()
     ps.unpersist()
+    release(dist0)
     return dist.orderBy("node")
 
 
@@ -970,24 +969,16 @@ def q_graph_kcore(spark, sf_dir):
     shrinks round over round. The peel count is fixed, so job count
     and lineage are bounded; at true 100 TB scale the same loop runs
     until fixpoint with a convergence counter."""
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = (o.join(li, o.o_orderkey == li.l_orderkey)
-             .select((F.col("o_custkey") * 2).alias("c"),
-                     (F.col("l_suppkey") * 2 + 1).alias("s"))
-             .distinct())
-    e = (pairs.select(F.col("c").alias("src"), F.col("s").alias("dst"))
-         .unionByName(pairs.select(F.col("s").alias("src"),
-                                   F.col("c").alias("dst"))))
-    for i in range(_KCORE_ROUNDS):
+    def _peel(e, _):
         keep = (e.groupBy("src").agg(F.count("*").alias("d"))
                 .filter(F.col("d") >= _KCORE_K)
                 .select(F.col("src").alias("node")))
-        e = (e.join(keep.withColumnRenamed("node", "src"), "src")
-             .join(keep.withColumnRenamed("node", "dst"), "dst")
-             .select("src", "dst"))
-        if i % 2 == 1:
-            e = e.localCheckpoint(eager=True)
+        return (e.join(keep.withColumnRenamed("node", "src"), "src")
+                .join(keep.withColumnRenamed("node", "dst"), "dst")
+                .select("src", "dst"))
+
+    e = fixpoint(trade_graph(spark, sf_dir)[1], _peel, _KCORE_ROUNDS,
+                 every=2)
     kind = F.when(F.col("node") % 2 == 0, "customer").otherwise("supplier")
     return (e.groupBy(F.col("src").alias("node"))
             .agg(F.count("*").alias("deg"))
@@ -1052,15 +1043,7 @@ def q_graph_random_walks(spark, sf_dir):
     equi-join of the walk frontier (bounded: seeds count) against the
     ranked adjacency; frontier never grows, so 100 TB cost is
     step-count × one hash-join probe over the adjacency relation."""
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = (o.join(li, o.o_orderkey == li.l_orderkey)
-             .select((F.col("o_custkey") * 2).alias("c"),
-                     (F.col("l_suppkey") * 2 + 1).alias("s"))
-             .distinct())
-    edges = (pairs.select(F.col("c").alias("src"), F.col("s").alias("dst"))
-             .unionByName(pairs.select(F.col("s").alias("src"),
-                                       F.col("c").alias("dst"))))
+    pairs, edges = trade_graph(spark, sf_dir)
     wsrc = W.partitionBy("src")
     nbr = (edges.distinct()
            .select("src", "dst",
@@ -1136,15 +1119,7 @@ d{k}_{r} AS MATERIALIZED (
         for r in range(1, _BC_SOURCES + 1)
         for k in range(1, _BC_DEPTH))
     return f"""
-WITH pairs AS MATERIALIZED (
-  SELECT DISTINCT o.o_custkey * 2 AS c, l.l_suppkey * 2 + 1 AS s
-  FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-),
-e0 AS MATERIALIZED (
-  SELECT c AS src, s AS dst FROM pairs
-  UNION ALL
-  SELECT s, c FROM pairs
-),
+WITH {_KCORE_EDGES_CTE},
 seeds AS (
   SELECT c AS node, row_number() OVER (ORDER BY c) AS rk
   FROM (SELECT DISTINCT c FROM pairs)
@@ -1184,55 +1159,57 @@ def q_graph_betweenness(spark, sf_dir):
     integer sum, each back-prop layer the same join shape reversed;
     sources are embarrassingly parallel (independent BFS trees) and
     at 100 TB run as one batched frontier keyed by (source, node)."""
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = (o.join(li, o.o_orderkey == li.l_orderkey)
-             .select((F.col("o_custkey") * 2).alias("c"),
-                     (F.col("l_suppkey") * 2 + 1).alias("s"))
-             .distinct())
-    edges = (pairs.select(F.col("c").alias("src"), F.col("s").alias("dst"))
-             .unionByName(pairs.select(F.col("s").alias("src"),
-                                       F.col("c").alias("dst")))
-             .persist())
+    pairs, edges = trade_graph(spark, sf_dir)
+    edges = edges.persist()
     seeds = (pairs.select("c").distinct().orderBy("c")
              .limit(_BC_SOURCES).collect())
     deltas = None
     for row in seeds:
         src = row["c"]
-        layers = [None] * (_BC_DEPTH + 1)
-        layers[0] = (edges.sparkSession.range(1)
-                     .select(F.lit(src).alias("node"),
-                             F.lit(1).cast("bigint").alias("sig")))
-        seen = layers[0].select("node")
-        for k in range(1, _BC_DEPTH + 1):
-            nxt = (edges.join(layers[k - 1]
-                              .withColumnRenamed("node", "src"), "src")
-                   .join(seen.withColumnRenamed("node", "dst"),
-                         "dst", "left_anti")
-                   .groupBy(F.col("dst").alias("node"))
-                   .agg(F.sum("sig").cast("bigint").alias("sig"))
-                   .localCheckpoint(eager=True))
-            layers[k] = nxt
-            seen = seen.unionByName(nxt.select("node"))
-        dl = layers[_BC_DEPTH].select(
-            "node", "sig", F.lit(0.0).alias("delta"))
-        for k in range(_BC_DEPTH - 1, 0, -1):
-            succ = dl.select(F.col("node").alias("w_node"),
-                             F.col("sig").alias("w_sig"),
-                             F.col("delta").alias("w_delta"))
+        # each state is the tuple of layers so far, so every layer stays
+        # held for the back-propagation (and every dl for the union)
+        def _layer(layers, _):
+            seen = layers[0].select("node")
+            for lay in layers[1:]:
+                seen = seen.unionByName(lay.select("node"))
+            return layers + (
+                edges.join(layers[-1].withColumnRenamed("node", "src"),
+                           "src")
+                .join(seen.withColumnRenamed("node", "dst"), "dst",
+                      "left_anti")
+                .groupBy(F.col("dst").alias("node"))
+                .agg(F.sum("sig").cast("bigint").alias("sig")),)
+
+        layers = fixpoint((edges.sparkSession.range(1)
+                           .select(F.lit(src).alias("node"),
+                                   F.lit(1).cast("bigint").alias("sig")),),
+                          _layer, _BC_DEPTH)
+
+        def _back(dls, i):
+            lay = layers[_BC_DEPTH - 1 - i]
+            succ = dls[-1].select(F.col("node").alias("w_node"),
+                                  F.col("sig").alias("w_sig"),
+                                  F.col("delta").alias("w_delta"))
             term = F.round((F.col("sig").cast("double") / F.col("w_sig"))
                            * (1.0 + F.col("w_delta")), 10)
-            dl = (layers[k]
-                  .join(edges, edges.src == layers[k].node, "left")
-                  .join(succ, F.col("w_node") == F.col("dst"), "left")
-                  .groupBy("node", "sig")
-                  .agg(F.coalesce(F.sum(term.cast("decimal(28,10)"))
-                                  .cast("double"), F.lit(0.0))
-                       .alias("delta"))
-                  .localCheckpoint(eager=True))
+            return dls + (
+                lay.join(edges, edges.src == lay.node, "left")
+                .join(succ, F.col("w_node") == F.col("dst"), "left")
+                .groupBy("node", "sig")
+                .agg(F.coalesce(F.sum(term.cast("decimal(28,10)"))
+                                .cast("double"), F.lit(0.0))
+                     .alias("delta")),)
+
+        dls = fixpoint((layers[-1].select("node", "sig",
+                                          F.lit(0.0).alias("delta")),),
+                       _back, _BC_DEPTH - 1)
+        for lay in layers[1:]:
+            release(lay)  # the materialized dls no longer read them
+        for dl in dls[1:]:
             part = dl.select("node", "delta")
             deltas = part if deltas is None else deltas.unionByName(part)
         # layers 1..DEPTH-1 carry delta; the deepest layer's delta is 0
+    edges.unpersist()
     acc = (deltas.groupBy("node")
            .agg(F.sum(F.round("delta", 10).cast("decimal(28,10)"))
                 .cast("double").alias("bc")))

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from .operators.fixpoint import fixpoint
 from .registry import query
 from .sources.fixtures import load_table
 
@@ -199,33 +200,36 @@ def q_topic_nmf(spark, sf_dir):
             s = term if s is None else s + term
         return s
 
-    for _ in range(_NMF_ITERS):
-        v10 = F.col("v").cast("decimal(10,0)")
-        # Hnum = WᵀV: one join on d, k sums per term
-        hnum = (v.join(w, "d")
-                .groupBy("t")
-                .agg(*[F.sum(F.col(f"w{c}") * v10).alias(f"num{c}")
-                       for c in range(K)]))
-        wtw = gram_row(w, "w")
-        h = (h.join(hnum, "t").crossJoin(F.broadcast(wtw))
-             .select("t", *[F.round(F.col(f"h{c}").cast("double")
-                                    * F.col(f"num{c}").cast("double")
-                                    / dot_g(c, "h").cast("double"), 8)
-                            .cast(_D8).alias(f"h{c}") for c in range(K)])
-             .localCheckpoint(eager=True))
-        # Wnum = VH'ᵀ: H is k x |vocab| — broadcast it (docstring
-        # license), so the V-sized side never re-shuffles
-        wnum = (v.join(F.broadcast(h), "t")
-                .groupBy("d")
-                .agg(*[F.sum(F.col(f"h{c}") * v10).alias(f"num{c}")
-                       for c in range(K)]))
-        hht = gram_row(h, "h")
-        w = (w.join(wnum, "d").crossJoin(F.broadcast(hht))
-             .select("d", *[F.round(F.col(f"w{c}").cast("double")
-                                    * F.col(f"num{c}").cast("double")
-                                    / dot_g(c, "w").cast("double"), 8)
-                            .cast(_D8).alias(f"w{c}") for c in range(K)])
-             .localCheckpoint(eager=True))
+    v10 = F.col("v").cast("decimal(10,0)")
+    key = {"h": "t", "w": "d"}  # each factor's row key
+
+    def update(f, col, other, ocol, ship=lambda x: x):
+        """One multiplicative update of factor f (columns col0..) from
+        the other factor: Fnum = V·other (one join on other's key, k
+        sums per term), divided by F·Gram(other)."""
+        num = (v.join(ship(other), key[ocol])
+               .groupBy(key[col])
+               .agg(*[F.sum(F.col(f"{ocol}{c}") * v10).alias(f"num{c}")
+                      for c in range(K)]))
+        return (f.join(num, key[col])
+                .crossJoin(F.broadcast(gram_row(other, ocol)))
+                .select(key[col], *[F.round(F.col(f"{col}{c}").cast("double")
+                                            * F.col(f"num{c}").cast("double")
+                                            / dot_g(c, col).cast("double"),
+                                            8).cast(_D8).alias(f"{col}{c}")
+                                    for c in range(K)]))
+
+    def _half_step(state, i):
+        h, w = state
+        if i % 2 == 0:
+            return update(h, "h", w, "w"), w
+        # H is k x |vocab| — broadcast it (docstring license), so the
+        # V-sized side never re-shuffles
+        return h, update(w, "w", h, "h", F.broadcast)
+
+    # one round per half-step: H's update is materialized before W's
+    # reads it
+    h, w = fixpoint((h, w), _half_step, 2 * _NMF_ITERS)
 
     # w and h are eagerly checkpointed, so nothing downstream re-reads
     # v — release the V-sized cache instead of leaking it across a

@@ -27,6 +27,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from .functions.hashsafe import davg, sql_davg
+from .queries_graph import TRADE_EDGES_CTE, trade_graph
 from .registry import query
 from .sources.fixtures import load_table
 
@@ -357,16 +358,8 @@ def q_interval_overlap(spark, sf_dir):
     return cand.select("a_key", "b_key").distinct()
 
 
-_BFS_ORACLE = """
-    WITH pairs AS (
-      SELECT DISTINCT o.o_custkey * 2 AS c, l.l_suppkey * 2 + 1 AS s
-      FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    ),
-    edges AS (
-      SELECT c AS src, s AS dst FROM pairs
-      UNION
-      SELECT s, c FROM pairs
-    ),
+_BFS_ORACLE = f"""
+    WITH {TRADE_EDGES_CTE},
     f0 AS (
       SELECT DISTINCT c_custkey * 2 AS node
       FROM customer WHERE c_nationkey = 0
@@ -402,21 +395,12 @@ def q_graph_bfs(spark, sf_dir):
     Scale: each round is one shuffle (join on src) + distinct; the
     frontier relation never exceeds |V|, and min-hop dedup happens once
     at the end instead of per-round."""
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
     cu = load_table(spark, sf_dir, "customer")
-    pairs = (o.join(li, o.o_orderkey == li.l_orderkey)
-             .select((F.col("o_custkey") * 2).alias("c"),
-                     (F.col("l_suppkey") * 2 + 1).alias("s"))
-             .distinct())
     # materialize the edge list once (same license as
     # operators/cluster.connected_components): without it each of the
     # three hop joins re-derives orders ⋈ lineitem → distinct, tripling
     # the most expensive shuffle in the plan
-    edges = (pairs.select(F.col("c").alias("src"), F.col("s").alias("dst"))
-             .unionByName(pairs.select(F.col("s").alias("src"),
-                                       F.col("c").alias("dst")))
-             .localCheckpoint(eager=True))
+    edges = trade_graph(spark, sf_dir)[1].localCheckpoint(eager=True)
     f0 = (cu.filter(F.col("c_nationkey") == 0)
           .select((F.col("c_custkey") * 2).alias("node")).distinct())
 

@@ -28,6 +28,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from .functions.hashsafe import DEC
+from .operators.fixpoint import fixpoint
 from .registry import query
 from .sources.fixtures import load_table
 from .session import fan_out_scan
@@ -441,7 +442,9 @@ def q_mmr_rerank(spark, sf_dir):
     sel = (cands.filter(F.col("crk") == 1)
            .select("probe_id", "vec_id", F.col("rel").alias("mmr"),
                    F.lit(1).alias("rk")))
-    for t in (2, 3):
+
+    def _pick(sel, i):
+        t = i + 2
         # anti-join out already-selected candidates, then penalty =
         # max sim against the selected set
         rem = cands.join(sel.select("probe_id", "vec_id"),
@@ -463,13 +466,15 @@ def q_mmr_rerank(spark, sf_dir):
                 .filter(F.col("prk") == 1)
                 .select("probe_id", "vec_id", "mmr",
                         F.lit(t).alias("rk")))
-        # eager checkpoint of the |probes|-sized selection per step
-        # (optimization round r12, guide §5 lineage): step t+1's
-        # anti-join AND penalty join AND the final union all reference
-        # `sel`, so the lazy form re-executed step 2's join/window
-        # subtree ~4x inside the final action — each re-run a stack of
-        # tiny stages whose scheduling overhead dominated the query.
-        sel = sel.unionByName(pick).localCheckpoint(eager=True)
+        return sel.unionByName(pick)
+
+    # eager checkpoint of the |probes|-sized selection per step
+    # (optimization round r12, guide §5 lineage): step t+1's anti-join
+    # AND penalty join AND the final union all reference `sel`, so the
+    # lazy form re-executed step 2's join/window subtree ~4x inside the
+    # final action — each re-run a stack of tiny stages whose
+    # scheduling overhead dominated the query.
+    sel = fixpoint(sel, _pick, 2)
     cands.unpersist()
     return (sel.select("probe_id", "rk", "vec_id",
                        (F.round("mmr", 4) + 0.0).alias("mmr"))

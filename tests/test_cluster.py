@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 
 def test_components_on_known_graph(spark):
     from challenge8_movies_etl_spark.operators.cluster import (
@@ -311,6 +313,20 @@ def test_components_long_chain_converges_via_observed_rounds(spark):
     got = {r["id"]: r["cluster"]
            for r in connected_components(nodes, edges).collect()}
     assert got == {i: 0 for i in range(n)}
+
+
+def test_components_round_cap_raises(spark):
+    """A diameter-7 chain cannot converge in 2 rounds: hitting the cap
+    while labels still move raises instead of returning split
+    components."""
+    from challenge8_movies_etl_spark.operators.cluster import (
+        connected_components,
+    )
+    nodes = spark.createDataFrame([(i,) for i in range(8)], "id bigint")
+    edges = spark.createDataFrame(
+        [(i + 1, i) for i in range(7)], "src bigint, dst bigint")
+    with pytest.raises(RuntimeError, match="still changing after 2"):
+        connected_components(nodes, edges, max_iter=2)
 
 
 def test_components_broadcast_labels_off_matches(spark):

@@ -234,3 +234,35 @@ def test_qbf_deciseconds_round_to_nearest():
     for i in range(0, 3000, 7):
         ds = int(qbf_tokens({"q_x": [i / 1000, 0.0]}, 10).split(":")[1])
         assert abs(ds / 10 - i / 1000) <= 0.05 + 1e-9, i
+
+
+def test_qbf_damaged_token_fails_loudly(tmp_path):
+    """A damaged front-coded token breaks the prefix chain for every
+    later name: the decode must stop with an error instead of gating
+    rows under wrong names."""
+    stdout = _fake_bench_stdout(108)
+    last = json.loads(stdout.splitlines()[-1])
+    toks = last["qbf"].split()
+    toks[40] = "#" + toks[40][1:]  # not a base36 prefix length
+    last["qbf"] = " ".join(toks)
+    rc, out = _run_gates({"parsed": last}, tmp_path)
+    assert rc == 2, out
+    assert "damaged qbf token" in out, out
+    assert "q_extra_" not in out.replace("after q_extra_", "")
+
+
+def test_qbf_best_only_rows_are_flagged_per_line(tmp_path):
+    """Rows whose median is the qbf line's best-only value are flagged
+    on their own output line; rows with a real median are not."""
+    stdout = _fake_bench_stdout(108)
+    gate8_line, qbf_line = stdout.splitlines()[-2:]
+    artifact = {"parsed": json.loads(qbf_line),
+                "tail": gate8_line + "\n" + qbf_line + "\n"}
+    rc, out = _run_gates(artifact, tmp_path)
+    assert rc == 0, out
+    rows = {ln.split()[0]: ln for ln in out.splitlines()
+            if ln.startswith("q_")}
+    flag = "(median=best: qbf best-only)"
+    assert all(flag not in rows[q] for q in HEADLINE8), out
+    extra = [q for q in rows if q.startswith("q_extra_")]
+    assert len(extra) == 100 and all(flag in rows[q] for q in extra), out

@@ -75,6 +75,18 @@ def canon_frame(pdf):
     return cols, rows
 
 
+def hygiene(spark) -> int:
+    """Free everything a query left persisted, as the benchmark client
+    does between queries, and return how many RDDs that was.
+    ``clearCache()`` alone frees ``persist()``ed frames but not
+    ``localCheckpoint`` RDDs, so a 477-query sweep would pile those up."""
+    rdds = list(spark.sparkContext._jsc.getPersistentRDDs().values())
+    spark.catalog.clearCache()
+    for rdd in rdds:
+        rdd.unpersist(True)
+    return len(rdds)
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -193,6 +205,7 @@ def main() -> int:
 
     qids = args.qids or sorted(queries)
     results: dict[str, dict] = {}
+    leaked: dict[str, int] = {}  # persisted RDDs each query left behind
     n_pass = n_fail = n_rows_only = 0
     failures: list[str] = []
     for qid in qids:
@@ -200,11 +213,6 @@ def main() -> int:
         q_sf = overrides.get(qid, args.sf)
         q_con = override_cons.get(overrides.get(qid, ""), con)
         try:
-            # cache hygiene (VERDICT r11 item 8): queries whose
-            # RETURNED plan consumes a persist() cannot unpersist
-            # before returning; clear between queries so a 477-query
-            # sweep never accumulates executor storage
-            spark.catalog.clearCache()
             sdf = queries[qid](spark, q_sf)
             spd = sdf.toPandas()
         except Exception as exc:  # noqa: BLE001
@@ -214,6 +222,8 @@ def main() -> int:
                             "err": f"Spark {type(exc).__name__}: {exc}"}
             print(f"FAIL  {qid}: Spark error: {type(exc).__name__}: {exc}")
             continue
+        finally:
+            leaked[qid] = hygiene(spark)
         if qid not in oracles:
             n_rows_only += 1
             results[qid] = {"status": "rows_only", "rows": len(spd)}
@@ -298,13 +308,17 @@ def main() -> int:
 
     print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only"
           + (f"  FAILURES: {failures}" if failures else ""))
+    leakers = {q: n for q, n in leaked.items() if n}
+    print(f"{len(leakers)} queries left persisted RDDs"
+          + (f": {leakers}" if leakers else ""))
     if args.json:
         import json
         Path(args.json).write_text(json.dumps({
             "sf_dir": args.sf,
             "n_pass": n_pass, "n_fail": n_fail, "n_rows_only": n_rows_only,
             "failures": failures,
-            "queries": results,
+            "queries": {q: {**r, "leaked_rdds": leaked[q]}
+                        for q, r in results.items()},
         }, indent=1) + "\n")
     return 1 if n_fail else 0
 

@@ -197,15 +197,21 @@ def _decode_qbf(payload: dict) -> dict[str, list[float]]:
     deciseconds ("ds")>. Best-only by design (the full best/median
     record is on bench stdout lines 1-2, which outgrow the driver's
     2000-char tail at 108 rows); median falls back to best here and is
-    overridden wherever a richer source survived the tail."""
+    overridden wherever a richer source survived the tail.
+
+    Raises ValueError at a damaged token: every later name is
+    front-coded against it, so the rest of the chain cannot be
+    decoded."""
     mul = 0.1 if payload.get("qv") == "ds" else 0.01
     stats: dict[str, list[float]] = {}
     prev = ""
     for tok in str(payload["qbf"]).split():
         head, _, v = tok.rpartition(":")
-        if not head or head[0] not in _B36 or not v.isdigit():
-            continue  # damaged token (should not happen: line is short)
-        name = prev[: _B36.index(head[0])] + head[1:]
+        lcp = _B36.find(head[:1]) if head else -1
+        if lcp < 0 or lcp > len(prev) or not v.isdigit():
+            raise ValueError(f"damaged qbf token {tok!r} after "
+                             f"{'q_' + prev if prev else 'the start'}")
+        name = prev[:lcp] + head[1:]
         sec = round(int(v) * mul, 3)
         stats["q_" + name] = [sec, sec]
         prev = name
@@ -244,6 +250,7 @@ def main() -> int:
     b = outer.get("parsed") or outer
     finals = None
     qbf_payload = None
+    best_only: set[str] = set()  # rows whose median is the qbf best
     if "qbf" in b:
         # r12 FINAL line (front-coded, all benched rows, best-only)
         # was the parsed payload; keep the outer dict active so its
@@ -351,7 +358,12 @@ def main() -> int:
     if qbf_payload is not None:
         # the front-coded FINAL line carries EVERY benched row
         # (best-only); rows recovered with real medians override it
-        full = _decode_qbf(qbf_payload)
+        try:
+            full = _decode_qbf(qbf_payload)
+        except ValueError as exc:
+            print(f"ERROR: {path}: {exc}")
+            return 2
+        best_only = set(full) - set(stats)
         n_med = len(stats)
         full.update(stats)
         stats = full
@@ -366,10 +378,11 @@ def main() -> int:
           f"{'ratio':>6}  verdict")
     breaches = []
     for q, (best, median) in sorted(stats.items()):
+        flag = "  (median=best: qbf best-only)" if q in best_only else ""
         base = BASELINES.get(q) or BASELINES.get(SHAPE.get(q, ""), None)
         if base is None:
             print(f"{q:28} {best:7.3f} {median:7.3f} {'—':>7} {'—':>6}  "
-                  "no gate (add a row or shape mapping)")
+                  "no gate (add a row or shape mapping)" + flag)
             continue
         gate = 2.0 * base * k
         val = best if use_best else median
@@ -378,7 +391,7 @@ def main() -> int:
         if ratio > 1.0:
             breaches.append(q)
         print(f"{q:28} {best:7.3f} {median:7.3f} {gate:7.2f} "
-              f"{ratio:6.2f}  {verdict}")
+              f"{ratio:6.2f}  {verdict}{flag}")
     if breaches:
         print(f"\nBREACHES: {breaches}")
     return 1 if breaches else 0
