@@ -21,11 +21,12 @@ peak memory one Arrow batch of payloads per task.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from .multimodal import synthesize
+from .rowmap import row_map
 
 
 def encode_wav_pcm16(rate: int, channels: list[np.ndarray],
@@ -266,61 +267,47 @@ AUDIO_SCHEMA = ("doc_id bigint, sample_rate bigint, channels bigint, "
                 "mean_abs double, zero_cross bigint")
 
 
+def _sawtooth(d: int) -> tuple[int, list[np.ndarray]]:
+    """Per-doc sample rate and channels: channel 0 is the sawtooth
+    ``((i*k) mod 2A) - A``; stereo (odd) docs carry a DIFFERENT
+    sawtooth (k+1) on channel 1."""
+    rate = 8000 + d % 3 * 4000
+    n = 50 + d % 97
+    k, amp = d % 11 + 1, 1000 * (d % 7 + 1)
+    i = np.arange(n, dtype=np.int64)
+    chans = [(i * k) % (2 * amp) - amp]
+    if d % 2:
+        chans.append((i * (k + 1)) % (2 * amp) - amp)
+    return rate, chans
+
+
 def synthesize_audio(docs: DataFrame) -> DataFrame:
     """Deterministic per-doc WAV payloads: rate / length / amplitude /
-    waveform slope are closed-form in doc_id.  Channel 0 is the
-    sawtooth ``((i*k) mod 2A) - A``; stereo docs carry a DIFFERENT
-    sawtooth (k+1) on channel 1, so a de-interleave stride mistake
-    changes channel 0's features and breaks the hash.  Every 5th doc
-    gets a LIST metadata chunk between fmt and data to force real
-    chunk walking."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                rate = 8000 + d % 3 * 4000
-                n = 50 + d % 97
-                k, amp = d % 11 + 1, 1000 * (d % 7 + 1)
-                i = np.arange(n, dtype=np.int64)
-                chans = [(i * k) % (2 * amp) - amp]
-                if d % 2:
-                    chans.append((i * (k + 1)) % (2 * amp) - amp)
-                payloads.append(encode_wav_pcm16(
-                    rate, chans, with_list_chunk=(d % 5 == 0)))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    waveform slope are closed-form in doc_id (``_sawtooth``), so a
+    de-interleave stride mistake changes channel 0's features and
+    breaks the hash.  Every 5th doc gets a LIST metadata chunk between
+    fmt and data to force real chunk walking."""
+    def encode(d):
+        return encode_wav_pcm16(*_sawtooth(d), with_list_chunk=(d % 5 == 0))
 
-    return docs.select("doc_id").mapInPandas(
-        run, schema="doc_id bigint, payload binary")
+    return synthesize(docs, encode)
 
 
 def decode_audio_features(media: DataFrame) -> DataFrame:
-    """mapInPandas over binary WAV payloads → per-doc signal features
-    on channel 0: duration, peak amplitude, mean |sample|, and
-    zero-crossing count.  All integer math until the two final
-    divisions (n*1000/rate, sum_abs/n), which are single IEEE ops —
-    bit-identical on any engine — before round(,4)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "sample_rate", "channels",
-                                   "n_samples", "duration_ms", "peak",
-                                   "mean_abs", "zero_cross")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rate, n_ch, s = decode_wav_pcm16(bytes(payload))
-                n = len(s)
-                a = np.abs(s)
-                out["doc_id"].append(doc_id)
-                out["sample_rate"].append(rate)
-                out["channels"].append(n_ch)
-                out["n_samples"].append(n)
-                out["duration_ms"].append(round(n * 1000.0 / rate, 4))
-                out["peak"].append(int(a.max()))
-                out["mean_abs"].append(round(int(a.sum()) / n, 4))
-                out["zero_cross"].append(int((s[1:] * s[:-1] < 0).sum()))
-            yield pd.DataFrame(out)
+    """Binary WAV payloads → per-doc signal features on channel 0:
+    duration, peak amplitude, mean |sample|, and zero-crossing count.
+    All integer math until the two final divisions (n*1000/rate,
+    sum_abs/n), which are single IEEE ops — bit-identical on any
+    engine — before round(,4)."""
+    def decode(doc_id, buf):
+        rate, n_ch, s = decode_wav_pcm16(buf)
+        n = len(s)
+        a = np.abs(s)
+        yield (doc_id, rate, n_ch, n, round(n * 1000.0 / rate, 4),
+               int(a.max()), round(int(a.sum()) / n, 4),
+               int((s[1:] * s[:-1] < 0).sum()))
 
-    return media.mapInPandas(run, schema=AUDIO_SCHEMA)
+    return row_map(media.select("doc_id", "payload"), decode, AUDIO_SCHEMA)
 
 
 VAD_SCHEMA = ("doc_id bigint, n_segments bigint, active_samples bigint, "
@@ -336,30 +323,20 @@ def vad_segments(media: DataFrame, threshold_frac: int = 2) -> DataFrame:
     built-in operator cannot express row-wise); output is one
     fixed-width feature row per doc, so downstream aggregation carries
     features, never samples."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "n_segments",
-                                   "active_samples", "longest_run",
-                                   "first_start")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _rate, _ch, s = decode_wav_pcm16(bytes(payload))
-                thr = int(np.abs(s).max()) // threshold_frac
-                mask = np.abs(s) >= thr
-                # run-length encode the activity mask
-                edges = np.flatnonzero(np.diff(
-                    np.concatenate(([0], mask.view(np.int8), [0]))))
-                starts, ends = edges[0::2], edges[1::2]
-                runs = ends - starts
-                out["doc_id"].append(doc_id)
-                out["n_segments"].append(len(runs))
-                out["active_samples"].append(int(runs.sum()))
-                out["longest_run"].append(
-                    int(runs.max()) if len(runs) else 0)
-                out["first_start"].append(
-                    int(starts[0]) if len(starts) else -1)
-            yield pd.DataFrame(out)
+    def segment(doc_id, buf):
+        _rate, _ch, s = decode_wav_pcm16(buf)
+        thr = int(np.abs(s).max()) // threshold_frac
+        mask = np.abs(s) >= thr
+        # run-length encode the activity mask
+        edges = np.flatnonzero(np.diff(
+            np.concatenate(([0], mask.view(np.int8), [0]))))
+        starts, ends = edges[0::2], edges[1::2]
+        runs = ends - starts
+        yield (doc_id, len(runs), int(runs.sum()),
+               int(runs.max()) if len(runs) else 0,
+               int(starts[0]) if len(starts) else -1)
 
-    return media.mapInPandas(run, schema=VAD_SCHEMA)
+    return row_map(media.select("doc_id", "payload"), segment, VAD_SCHEMA)
 
 
 PITCH_SCHEMA = ("doc_id bigint, best_lag bigint, ac_peak bigint, "
@@ -377,25 +354,17 @@ def autocorr_pitch(media: DataFrame, max_lag: int = 20) -> DataFrame:
     transcendental constants no cross-engine oracle can reproduce
     bit-exactly, and for periodicity detection the time-domain
     autocorrelation is the same information."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "best_lag", "ac_peak",
-                                   "energy")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _rate, _ch, s = decode_wav_pcm16(bytes(payload))
-                s = s.astype(np.int64)
-                best_lag, ac_peak = 0, None
-                for lag in range(1, max_lag + 1):
-                    ac = int(np.dot(s[:-lag], s[lag:]))
-                    if ac_peak is None or ac > ac_peak:
-                        best_lag, ac_peak = lag, ac
-                out["doc_id"].append(doc_id)
-                out["best_lag"].append(best_lag)
-                out["ac_peak"].append(ac_peak)
-                out["energy"].append(int(np.dot(s, s)))
-            yield pd.DataFrame(out)
+    def pitch(doc_id, buf):
+        _rate, _ch, s = decode_wav_pcm16(buf)
+        s = s.astype(np.int64)
+        best_lag, ac_peak = 0, None
+        for lag in range(1, max_lag + 1):
+            ac = int(np.dot(s[:-lag], s[lag:]))
+            if ac_peak is None or ac > ac_peak:
+                best_lag, ac_peak = lag, ac
+        yield doc_id, best_lag, ac_peak, int(np.dot(s, s))
 
-    return media.mapInPandas(run, schema=PITCH_SCHEMA)
+    return row_map(media.select("doc_id", "payload"), pitch, PITCH_SCHEMA)
 
 
 FLOAT_SCHEMA = ("doc_id bigint, fmt_tag bigint, sample_rate bigint, "
@@ -404,31 +373,18 @@ FLOAT_SCHEMA = ("doc_id bigint, fmt_tag bigint, sample_rate bigint, "
 
 
 def synthesize_audio_float(docs: DataFrame) -> DataFrame:
-    """Deterministic IEEE-float32 WAV payloads (format tag 3): channel
-    0 is the PCM sawtooth divided by 1024 — a dyadic rational, exactly
-    representable in float32 AND in the f64 arithmetic both engines
-    use — so peak and mean|s| have closed forms the oracle recomputes
-    from the integer sawtooth with two exact divisions. Stereo docs
-    interleave a different sawtooth on channel 1 (stride check)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                rate = 8000 + d % 3 * 4000
-                n = 50 + d % 97
-                k, amp = d % 11 + 1, 1000 * (d % 7 + 1)
-                i = np.arange(n, dtype=np.int64)
-                chans = [((i * k) % (2 * amp) - amp) / 1024.0]
-                if d % 2:
-                    chans.append(((i * (k + 1)) % (2 * amp) - amp)
-                                 / 1024.0)
-                payloads.append(encode_wav_float32(rate, chans))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    """Deterministic IEEE-float32 WAV payloads (format tag 3): each
+    channel is the ``_sawtooth`` PCM signal divided by 1024 — a dyadic
+    rational, exactly representable in float32 AND in the f64
+    arithmetic both engines use — so peak and mean|s| have closed
+    forms the oracle recomputes from the integer sawtooth with two
+    exact divisions. Stereo docs interleave a different sawtooth on
+    channel 1 (stride check)."""
+    def encode(d):
+        rate, chans = _sawtooth(d)
+        return encode_wav_float32(rate, [c / 1024.0 for c in chans])
 
-    return docs.select("doc_id").mapInPandas(
-        run, schema="doc_id bigint, payload binary")
+    return synthesize(docs, encode)
 
 
 def decode_audio_features_float(media: DataFrame) -> DataFrame:
@@ -436,38 +392,37 @@ def decode_audio_features_float(media: DataFrame) -> DataFrame:
     with denominator 1024 and the |sum| stays far below 2^53, so the
     f64 sum is EXACT and the single final division matches the
     oracle's bit for bit."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "fmt_tag", "sample_rate",
-                                   "channels", "n_samples", "peak",
-                                   "mean_abs", "zero_cross")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                tag, rate, n_ch, s = decode_wav(bytes(payload))
-                if tag != 3:
-                    raise NotImplementedError(
-                        f"expected float32 WAV, got tag {tag}")
-                n = len(s)
-                a = np.abs(s)
-                out["doc_id"].append(doc_id)
-                out["fmt_tag"].append(tag)
-                out["sample_rate"].append(rate)
-                out["channels"].append(n_ch)
-                out["n_samples"].append(n)
-                out["peak"].append(float(a.max()))
-                # no python round here: the dyadic sums make exact
-                # .xxxx5 ties COMMON, and python rounds half-to-even
-                # while both engines' SQL round is HALF_UP — the
-                # query applies F.round instead
-                out["mean_abs"].append(float(a.sum()) / n)
-                out["zero_cross"].append(int((s[1:] * s[:-1] < 0).sum()))
-            yield pd.DataFrame(out)
+    def decode(doc_id, buf):
+        tag, rate, n_ch, s = decode_wav(buf)
+        if tag != 3:
+            raise NotImplementedError(
+                f"expected float32 WAV, got tag {tag}")
+        a = np.abs(s)
+        # no python round on mean_abs: the dyadic sums make exact
+        # .xxxx5 ties COMMON, and python rounds half-to-even while
+        # both engines' SQL round is HALF_UP — the query applies
+        # F.round instead
+        yield (doc_id, tag, rate, n_ch, len(s), float(a.max()),
+               float(a.sum()) / len(s), int((s[1:] * s[:-1] < 0).sum()))
 
-    return media.mapInPandas(run, schema=FLOAT_SCHEMA)
+    return row_map(media.select("doc_id", "payload"), decode, FLOAT_SCHEMA)
 
 
 MULAW_SCHEMA = ("doc_id bigint, fmt_tag bigint, sample_rate bigint, "
                 "channels bigint, n_samples bigint, peak bigint, "
                 "sum_abs bigint, zero_cross bigint")
+
+
+def _g711_signal(d: int, n: int, k: int, scale: int,
+                 offset: int) -> list[np.ndarray]:
+    """Alternating-sign channels ``±(scale·((i·k) mod 16) + offset)``;
+    odd docs add a k+1 channel."""
+    i = np.arange(n, dtype=np.int64)
+    sign = np.where(i % 2 == 0, 1, -1)
+    chans = [sign * (scale * ((i * k) % 16) + offset)]
+    if d % 2:
+        chans.append(sign * (scale * ((i * (k + 1)) % 16) + offset))
+    return chans
 
 
 def synthesize_audio_mulaw(docs: DataFrame) -> DataFrame:
@@ -480,51 +435,29 @@ def synthesize_audio_mulaw(docs: DataFrame) -> DataFrame:
     no companding table on its side. A wrong table, bias, or segment
     shift in the decoder lands off the representable grid and breaks
     peak/sum_abs."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 40 + d % 61
-                k = d % 7 + 1
-                i = np.arange(n, dtype=np.int64)
-                sign = np.where(i % 2 == 0, 1, -1)
-                chans = [sign * 8 * ((i * k) % 16)]
-                if d % 2:
-                    chans.append(sign * 8 * ((i * (k + 1)) % 16))
-                payloads.append(encode_wav_mulaw(8000, chans))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    return synthesize(docs, lambda d: encode_wav_mulaw(8000, _g711_signal(
+        d, 40 + d % 61, d % 7 + 1, 8, 0)))
 
-    return docs.select("doc_id").mapInPandas(
-        run, schema="doc_id bigint, payload binary")
+
+def _decode_g711_features(media: DataFrame, tag: int,
+                          law: str) -> DataFrame:
+    """G.711 feature extractor — all-integer output (sum_abs instead
+    of mean), so the value hash needs no float discipline at all."""
+    def decode(doc_id, buf):
+        got, rate, n_ch, s = decode_wav(buf)
+        if got != tag:
+            raise NotImplementedError(
+                f"expected {law} WAV, got tag {got}")
+        a = np.abs(s)
+        yield (doc_id, got, rate, n_ch, len(s), int(a.max()),
+               int(a.sum()), int((s[1:] * s[:-1] < 0).sum()))
+
+    return row_map(media.select("doc_id", "payload"), decode, MULAW_SCHEMA)
 
 
 def decode_audio_features_mulaw(media: DataFrame) -> DataFrame:
-    """mu-law feature extractor — all-integer output (sum_abs instead
-    of mean), so the value hash needs no float discipline at all."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "fmt_tag", "sample_rate",
-                                   "channels", "n_samples", "peak",
-                                   "sum_abs", "zero_cross")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                tag, rate, n_ch, s = decode_wav(bytes(payload))
-                if tag != 7:
-                    raise NotImplementedError(
-                        f"expected mu-law WAV, got tag {tag}")
-                a = np.abs(s)
-                out["doc_id"].append(doc_id)
-                out["fmt_tag"].append(tag)
-                out["sample_rate"].append(rate)
-                out["channels"].append(n_ch)
-                out["n_samples"].append(len(s))
-                out["peak"].append(int(a.max()))
-                out["sum_abs"].append(int(a.sum()))
-                out["zero_cross"].append(int((s[1:] * s[:-1] < 0).sum()))
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(run, schema=MULAW_SCHEMA)
+    """mu-law (format tag 7) features, see ``_decode_g711_features``."""
+    return _decode_g711_features(media, 7, "mu-law")
 
 
 def synthesize_audio_alaw(docs: DataFrame) -> DataFrame:
@@ -537,48 +470,10 @@ def synthesize_audio_alaw(docs: DataFrame) -> DataFrame:
     companding table on its side. A wrong 0x55 inversion, segment
     shift, or sign convention (A-law's sign bit SET means positive)
     lands off the grid and breaks peak/sum_abs."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 40 + d % 53
-                k = d % 5 + 1
-                i = np.arange(n, dtype=np.int64)
-                sign = np.where(i % 2 == 0, 1, -1)
-                chans = [sign * (16 * ((i * k) % 16) + 8)]
-                if d % 2:
-                    chans.append(sign * (16 * ((i * (k + 1)) % 16) + 8))
-                payloads.append(encode_wav_alaw(8000, chans))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    return docs.select("doc_id").mapInPandas(
-        run, schema="doc_id bigint, payload binary")
+    return synthesize(docs, lambda d: encode_wav_alaw(8000, _g711_signal(
+        d, 40 + d % 53, d % 5 + 1, 16, 8)))
 
 
 def decode_audio_features_alaw(media: DataFrame) -> DataFrame:
-    """A-law feature extractor — all-integer output like the mu-law
-    twin, so the value hash needs no float discipline at all."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "fmt_tag", "sample_rate",
-                                   "channels", "n_samples", "peak",
-                                   "sum_abs", "zero_cross")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                tag, rate, n_ch, s = decode_wav(bytes(payload))
-                if tag != 6:
-                    raise NotImplementedError(
-                        f"expected A-law WAV, got tag {tag}")
-                a = np.abs(s)
-                out["doc_id"].append(doc_id)
-                out["fmt_tag"].append(tag)
-                out["sample_rate"].append(rate)
-                out["channels"].append(n_ch)
-                out["n_samples"].append(len(s))
-                out["peak"].append(int(a.max()))
-                out["sum_abs"].append(int(a.sum()))
-                out["zero_cross"].append(int((s[1:] * s[:-1] < 0).sum()))
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(run, schema=MULAW_SCHEMA)
+    """A-law (format tag 6) features, see ``_decode_g711_features``."""
+    return _decode_g711_features(media, 6, "A-law")

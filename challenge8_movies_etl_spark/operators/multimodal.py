@@ -16,12 +16,13 @@ frames; decode parallelism == partition count, no shuffle at all.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .rowmap import row_map
 
 MEDIA_SCHEMA = ("doc_id bigint, n_bytes bigint, fake_width bigint, "
                 "fake_height bigint, fmt string")
@@ -62,11 +63,8 @@ def decode_stub(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def decode_features(media: DataFrame) -> DataFrame:
     """mapInPandas over binary payloads → typed metadata rows."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield decode_stub(pdf)
-
-    return media.mapInPandas(run, schema=MEDIA_SCHEMA)
+    return media.mapInPandas(lambda batches: map(decode_stub, batches),
+                             schema=MEDIA_SCHEMA)
 
 
 FRAME_SCHEMA = "doc_id bigint, frame_idx bigint, frame_len bigint"
@@ -76,25 +74,17 @@ def frame_sample(media: DataFrame, frame_bytes: int = 32,
                  every: int = 4) -> DataFrame:
     """Video-style frame sampling over opaque payloads: chunk each
     payload into ``frame_bytes`` frames, keep every ``every``-th one —
-    the mapInPandas row-EXPLODING shape (one input row → many output
-    rows) that real frame extractors use. Decode is the stub (byte
-    slicing); batch shape, schema, and fan-out are real. At 100 TB the
-    fan-out happens executor-side inside the Arrow batch, never on the
+    the row-EXPLODING shape (one input row → many output rows) that
+    real frame extractors use. Decode is the stub (byte slicing);
+    batch shape, schema, and fan-out are real. At 100 TB the fan-out
+    happens executor-side inside the Arrow batch, never on the
     driver, and needs no shuffle."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            doc, idx, ln = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                n = len(payload)
-                n_frames = (n + frame_bytes - 1) // frame_bytes
-                for i in range(0, n_frames, every):
-                    doc.append(doc_id)
-                    idx.append(i)
-                    ln.append(min(frame_bytes, n - i * frame_bytes))
-            yield pd.DataFrame({"doc_id": doc, "frame_idx": idx,
-                                "frame_len": ln})
+    def sample(doc_id, payload):
+        n = len(payload)
+        for i in range(0, (n + frame_bytes - 1) // frame_bytes, every):
+            yield doc_id, i, min(frame_bytes, n - i * frame_bytes)
 
-    return media.mapInPandas(run, schema=FRAME_SCHEMA)
+    return row_map(media.select("doc_id", "payload"), sample, FRAME_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -166,66 +156,60 @@ def _decode_ppm(buf: bytes) -> tuple[int, int, float, float, float]:
     return width, height, float(means[0]), float(means[1]), float(means[2])
 
 
+def _channel_means(img: "np.ndarray") -> tuple[float, float, float]:
+    if img.ndim == 2:  # grayscale
+        m = float(img.mean())
+        return m, m, m
+    return (float(img[:, :, 0].mean()), float(img[:, :, 1].mean()),
+            float(img[:, :, 2].mean()))
+
+
 def decode_image_features(media: DataFrame) -> DataFrame:
-    """mapInPandas over binary image payloads → (fmt, dims, channel
-    means). Magic-byte dispatch: BM → real BMP parse, P6 → real PPM
-    parse, FFD8 → real baseline grayscale JPEG decode (operators/
-    jpeg.py: markers, Huffman, dequant, IDCT — no libraries); any
-    other format raises NotImplementedError naming the missing codec
-    (the honest-stub policy — no fake features on a format we cannot
-    actually decode; JPEG variants outside the baseline-grayscale
-    subset raise from the decoder itself).
+    """Binary image payloads → (fmt, dims, channel means). Magic-byte
+    dispatch: BM → real BMP parse, P6 → real PPM parse, FFD8 → real
+    baseline JPEG decode (operators/jpeg.py: markers, Huffman,
+    dequant, IDCT — no libraries), 89PNG → real PNG decode
+    (operators/png.py); any other format raises NotImplementedError
+    naming the missing codec (the honest-stub policy — no fake
+    features on a format we cannot actually decode; JPEG variants
+    outside the supported subset raise from the decoder itself).
 
     At 100 TB this runs one Arrow batch of payloads at a time per
     partition — no shuffle, decode parallelism == partition count."""
     from .jpeg import decode_jpeg
     from .png import decode_png
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "fmt", "width", "height",
-                                   "mean_r", "mean_g", "mean_b")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(payload)
-                if buf[:2] == b"BM":
-                    fmt = "bmp"
-                    w, h, r, g, b = _decode_bmp(buf)
-                elif buf[:2] == b"P6":
-                    fmt = "ppm"
-                    w, h, r, g, b = _decode_ppm(buf)
-                elif buf[:2] == b"\xff\xd8":
-                    fmt = "jpeg"
-                    w, h, img = decode_jpeg(buf)
-                    if img.ndim == 2:  # grayscale
-                        r = g = b = float(img.mean())
-                    else:  # YCbCr color, decoded to RGB
-                        r = float(img[:, :, 0].mean())
-                        g = float(img[:, :, 1].mean())
-                        b = float(img[:, :, 2].mean())
-                elif buf[:4] == b"\x89PNG":
-                    fmt = "png"
-                    w, h, img = decode_png(buf)
-                    if img.ndim == 2:
-                        r = g = b = float(img.mean())
-                    else:
-                        r = float(img[:, :, 0].mean())
-                        g = float(img[:, :, 1].mean())
-                        b = float(img[:, :, 2].mean())
-                else:
-                    raise NotImplementedError(
-                        "no codec for this payload in container "
-                        "(BMP/P6-PPM/baseline-JPEG gray+YCbCr/PNG decode "
-                        "is dependency-free)")
-                out["doc_id"].append(doc_id)
-                out["fmt"].append(fmt)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mean_r"].append(r)
-                out["mean_g"].append(g)
-                out["mean_b"].append(b)
-            yield pd.DataFrame(out)
+    def decode(doc_id, buf):
+        if buf[:2] == b"BM":
+            yield doc_id, "bmp", *_decode_bmp(buf)
+        elif buf[:2] == b"P6":
+            yield doc_id, "ppm", *_decode_ppm(buf)
+        elif buf[:2] == b"\xff\xd8":
+            w, h, img = decode_jpeg(buf)
+            yield doc_id, "jpeg", w, h, *_channel_means(img)
+        elif buf[:4] == b"\x89PNG":
+            w, h, img = decode_png(buf)
+            yield doc_id, "png", w, h, *_channel_means(img)
+        else:
+            raise NotImplementedError(
+                "no codec for this payload in container "
+                "(BMP/P6-PPM/baseline-JPEG gray+YCbCr/PNG decode "
+                "is dependency-free)")
 
-    return media.mapInPandas(run, schema=IMAGE_SCHEMA)
+    return row_map(media.select("doc_id", "payload"), decode, IMAGE_SCHEMA)
+
+
+PAYLOAD_SCHEMA = "doc_id bigint, payload binary"
+
+
+def synthesize(docs: DataFrame, encode) -> DataFrame:
+    """Per-doc media payloads: one ``(doc_id, encode(doc_id))`` row per
+    doc. Every ``synthesize_*`` fixture generator is an ``encode``
+    closed-form in doc_id behind this one stage."""
+    def one(doc_id):
+        yield doc_id, encode(doc_id)
+
+    return row_map(docs.select("doc_id"), one, PAYLOAD_SCHEMA)
 
 
 def synthesize_images(docs: DataFrame) -> DataFrame:
@@ -241,24 +225,28 @@ def synthesize_images(docs: DataFrame) -> DataFrame:
     bit-for-bit (operators/jpeg.py encode_jpeg_gray_uniform)."""
     from .jpeg import encode_jpeg_gray_uniform
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = d % 13 + 1, d % 7 + 1
-                if d % 3 == 2:
-                    payloads.append(
-                        encode_jpeg_gray_uniform(w, h, (d * 5) % 128 * 2))
-                    continue
-                r, g, b = d % 256, (d * 7) % 256, (d * 13) % 256
-                enc = encode_bmp if d % 3 == 0 else encode_ppm
-                payloads.append(enc(w, h, r, g, b))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def encode(d):
+        w, h = d % 13 + 1, d % 7 + 1
+        if d % 3 == 2:
+            return encode_jpeg_gray_uniform(w, h, (d * 5) % 128 * 2)
+        enc = encode_bmp if d % 3 == 0 else encode_ppm
+        return enc(w, h, d % 256, (d * 7) % 256, (d * 13) % 256)
 
-    return docs.select("doc_id").mapInPandas(
-        run, schema="doc_id bigint, payload binary")
+    return synthesize(docs, encode)
+
+
+def _jpeg_color_encoder(subs: tuple[str, str]):
+    """Uniform-color JPEG per doc; even docs take sampling ``subs[0]``,
+    odd docs ``subs[1]``."""
+    from .jpeg import encode_jpeg_color_uniform
+
+    def encode(d):
+        return encode_jpeg_color_uniform(
+            d % 13 + 1, d % 7 + 1, 2 * ((d * 5) % 128),
+            128 + 17 * (d % 9 - 4), 128 + 17 * ((d * 3) % 9 - 4),
+            subs[d % 2])
+
+    return encode
 
 
 def synthesize_color_images(docs: DataFrame) -> DataFrame:
@@ -270,25 +258,7 @@ def synthesize_color_images(docs: DataFrame) -> DataFrame:
     doc_id — an engine-independent SQL oracle verifies the full color
     path (chroma tables, per-component Huffman/DC prediction, 2x2
     upsampling, color transform) without any codec."""
-    from .jpeg import encode_jpeg_color_uniform
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = d % 13 + 1, d % 7 + 1
-                y = 2 * ((d * 5) % 128)
-                cb = 128 + 17 * (d % 9 - 4)
-                cr = 128 + 17 * ((d * 3) % 9 - 4)
-                sub = "444" if d % 2 == 0 else "420"
-                payloads.append(
-                    encode_jpeg_color_uniform(w, h, y, cb, cr, sub))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    return docs.select("doc_id").mapInPandas(
-        run, schema="doc_id bigint, payload binary")
+    return synthesize(docs, _jpeg_color_encoder(("444", "420")))
 
 
 def synthesize_color_images_422(docs: DataFrame) -> DataFrame:
@@ -297,25 +267,7 @@ def synthesize_color_images_422(docs: DataFrame) -> DataFrame:
     MCUs are 2Y+Cb+Cr with chroma stretched along one axis only, so
     the decoder's per-axis replication factors and MCU geometry are
     exercised independently of the square 4:2:0 path."""
-    from .jpeg import encode_jpeg_color_uniform
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = d % 13 + 1, d % 7 + 1
-                y = 2 * ((d * 5) % 128)
-                cb = 128 + 17 * (d % 9 - 4)
-                cr = 128 + 17 * ((d * 3) % 9 - 4)
-                sub = "422" if d % 2 == 0 else "440"
-                payloads.append(
-                    encode_jpeg_color_uniform(w, h, y, cb, cr, sub))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    return docs.select("doc_id").mapInPandas(
-        run, schema="doc_id bigint, payload binary")
+    return synthesize(docs, _jpeg_color_encoder(("422", "440")))
 
 
 def synthesize_progressive_images(docs: DataFrame) -> DataFrame:
@@ -327,18 +279,15 @@ def synthesize_progressive_images(docs: DataFrame) -> DataFrame:
     (operators/jpeg.encode_jpeg_progressive_gray_uniform)."""
     from .jpeg import encode_jpeg_progressive_gray_uniform
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                payloads.append(encode_jpeg_progressive_gray_uniform(
-                    d % 13 + 1, d % 7 + 1, 2 * ((d * 11) % 128)))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    return synthesize(docs, lambda d: encode_jpeg_progressive_gray_uniform(
+        d % 13 + 1, d % 7 + 1, 2 * ((d * 11) % 128)))
 
-    return docs.select("doc_id").mapInPandas(
-        run, schema="doc_id bigint, payload binary")
+
+def _png_rgb_encoder(encode_png):
+    """``encode_png(w, h, r0, g0, b0)`` at the shared per-doc geometry
+    and base colour."""
+    return lambda d: encode_png(d % 13 + 1, d % 7 + 1, d % 200,
+                                (d * 7) % 200, (d * 13) % 200)
 
 
 def synthesize_png_images(docs: DataFrame) -> DataFrame:
@@ -352,19 +301,7 @@ def synthesize_png_images(docs: DataFrame) -> DataFrame:
     end to end with no codec on its side."""
     from .png import encode_png_gradient
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                payloads.append(encode_png_gradient(
-                    d % 13 + 1, d % 7 + 1,
-                    d % 200, (d * 7) % 200, (d * 13) % 200))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    return docs.select("doc_id").mapInPandas(
-        run, schema="doc_id bigint, payload binary")
+    return synthesize(docs, _png_rgb_encoder(encode_png_gradient))
 
 
 def synthesize_palette_images(docs: DataFrame) -> DataFrame:
@@ -378,19 +315,7 @@ def synthesize_palette_images(docs: DataFrame) -> DataFrame:
     expansion end to end."""
     from .png import encode_png_palette
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                payloads.append(encode_png_palette(
-                    d % 13 + 1, d % 7 + 1,
-                    d % 200, (d * 7) % 200, (d * 13) % 200))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    return docs.select("doc_id").mapInPandas(
-        run, schema="doc_id bigint, payload binary")
+    return synthesize(docs, _png_rgb_encoder(encode_png_palette))
 
 
 def synthesize_png16_images(docs: DataFrame) -> DataFrame:
@@ -401,18 +326,8 @@ def synthesize_png16_images(docs: DataFrame) -> DataFrame:
     bpp=2 and reassemble big-endian u16 samples."""
     from .png import encode_png_gradient16
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                payloads.append(encode_png_gradient16(
-                    d % 13 + 1, d % 7 + 1, (d * 11) % 50000))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    return docs.select("doc_id").mapInPandas(
-        run, schema="doc_id bigint, payload binary")
+    return synthesize(docs, lambda d: encode_png_gradient16(
+        d % 13 + 1, d % 7 + 1, (d * 11) % 50000))
 
 
 def synthesize_adam7_images(docs: DataFrame) -> DataFrame:
@@ -423,19 +338,7 @@ def synthesize_adam7_images(docs: DataFrame) -> DataFrame:
     back to (x, y)."""
     from .png import encode_png_adam7
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                payloads.append(encode_png_adam7(
-                    d % 13 + 1, d % 7 + 1,
-                    d % 200, (d * 7) % 200, (d * 13) % 200))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    return docs.select("doc_id").mapInPandas(
-        run, schema="doc_id bigint, payload binary")
+    return synthesize(docs, _png_rgb_encoder(encode_png_adam7))
 
 
 PROBE_SCHEMA = ("doc_id bigint, fmt string, width bigint, "
@@ -453,29 +356,16 @@ def decode_image_probes(media: DataFrame) -> DataFrame:
     q_multimodal_decode_adam7)."""
     from .png import decode_png
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "fmt", "width", "height",
-                                   "mean_r", "mean_g", "px_tl",
-                                   "px_br", "px_center_g")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(payload)
-                if buf[:4] != b"\x89PNG":
-                    raise NotImplementedError(
-                        "probe decode supports PNG payloads only")
-                w, h, img = decode_png(buf)
-                out["doc_id"].append(doc_id)
-                out["fmt"].append("png")
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mean_r"].append(float(img[:, :, 0].mean()))
-                out["mean_g"].append(float(img[:, :, 1].mean()))
-                out["px_tl"].append(int(img[0, 0, 0]))
-                out["px_br"].append(int(img[h - 1, w - 1, 0]))
-                out["px_center_g"].append(int(img[h // 2, w // 2, 1]))
-            yield pd.DataFrame(out)
+    def decode(doc_id, buf):
+        if buf[:4] != b"\x89PNG":
+            raise NotImplementedError(
+                "probe decode supports PNG payloads only")
+        w, h, img = decode_png(buf)
+        yield (doc_id, "png", w, h, float(img[:, :, 0].mean()),
+               float(img[:, :, 1].mean()), int(img[0, 0, 0]),
+               int(img[h - 1, w - 1, 0]), int(img[h // 2, w // 2, 1]))
 
-    return media.mapInPandas(run, schema=PROBE_SCHEMA)
+    return row_map(media.select("doc_id", "payload"), decode, PROBE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

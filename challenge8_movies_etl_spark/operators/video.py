@@ -19,11 +19,11 @@ inside the batch, never on the driver.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from .multimodal import synthesize
+from .rowmap import row_map
 
 
 def encode_y4m(width: int, height: int,
@@ -103,55 +103,36 @@ VIDEO_SCHEMA = ("doc_id bigint, frame_idx bigint, width bigint, "
                 "mean_cb double, mean_cr double")
 
 
+def _y4m_frames(d: int) -> "list[tuple[int, int, int]]":
+    """Per-doc frame colours: 3 + doc_id%5 frames, each a uniform
+    (y, cb, cr) closed-form in (doc_id, frame_idx)."""
+    return [((d * 7 + i * 31) % 256, (d * 13 + i * 17) % 256,
+             (d * 19 + i * 23) % 256) for i in range(3 + d % 5)]
+
+
 def synthesize_videos(docs: DataFrame) -> DataFrame:
     """Deterministic per-doc Y4M payloads: geometry, frame count, and
     each frame's uniform (y, cb, cr) are closed-form in (doc_id,
     frame_idx), alternating C420jpeg / C444 so both plane layouts are
     walked.  An engine-independent oracle can verify the SAMPLED
     frames' decoded plane means without touching bytes."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 2 * (d % 8 + 1), 2 * (d % 4 + 1)
-                n = 3 + d % 5
-                frames = [((d * 7 + i * 31) % 256,
-                           (d * 13 + i * 17) % 256,
-                           (d * 19 + i * 23) % 256) for i in range(n)]
-                chroma = "420jpeg" if d % 2 == 0 else "444"
-                payloads.append(encode_y4m(w, h, frames, chroma))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    return docs.select("doc_id").mapInPandas(
-        run, schema="doc_id bigint, payload binary")
+    return synthesize(docs, lambda d: encode_y4m(
+        2 * (d % 8 + 1), 2 * (d % 4 + 1), _y4m_frames(d),
+        "420jpeg" if d % 2 == 0 else "444"))
 
 
 def frame_stats(media: DataFrame, every: int = 2) -> DataFrame:
-    """mapInPandas over binary Y4M payloads → one row per SAMPLED
-    frame (every ``every``-th) with per-plane means — the real
-    frame-extraction fan-out shape (decode → sample → featurize)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "frame_idx", "width",
-                                   "height", "chroma", "mean_y",
-                                   "mean_cb", "mean_cr")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, chroma, frames = decode_y4m(bytes(payload))
-                for i in range(0, len(frames), every):
-                    y, cb, cr = frames[i]
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(i)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["chroma"].append(chroma)
-                    out["mean_y"].append(round(float(y.mean()), 4))
-                    out["mean_cb"].append(round(float(cb.mean()), 4))
-                    out["mean_cr"].append(round(float(cr.mean()), 4))
-            yield pd.DataFrame(out)
+    """Binary Y4M payloads → one row per SAMPLED frame (every
+    ``every``-th) with per-plane means — the real frame-extraction
+    fan-out shape (decode → sample → featurize)."""
+    def sample(doc_id, buf):
+        w, h, chroma, frames = decode_y4m(buf)
+        for i in range(0, len(frames), every):
+            y, cb, cr = frames[i]
+            yield (doc_id, i, w, h, chroma, round(float(y.mean()), 4),
+                   round(float(cb.mean()), 4), round(float(cr.mean()), 4))
 
-    return media.mapInPandas(run, schema=VIDEO_SCHEMA)
+    return row_map(media.select("doc_id", "payload"), sample, VIDEO_SCHEMA)
 
 
 SCENE_SCHEMA = ("doc_id bigint, n_frames bigint, n_cuts bigint, "
@@ -166,47 +147,22 @@ def scene_cuts(media: DataFrame, threshold: int = 64) -> DataFrame:
     per-pixel mean diff is an exact integer and the oracle reproduces
     it in closed form; the decoder still computes it from the real
     decoded planes, so any plane-geometry bug breaks the hash."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "n_frames", "n_cuts",
-                                   "first_cut", "max_diff")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _w, _h, _chroma, frames = decode_y4m(bytes(payload))
-                diffs = []
-                for (y0, _, _), (y1, _, _) in zip(frames, frames[1:]):
-                    d = np.abs(y1.astype(np.int64)
-                               - y0.astype(np.int64)).mean()
-                    diffs.append(int(d))
-                cuts = [i + 1 for i, d in enumerate(diffs)
-                        if d >= threshold]
-                out["doc_id"].append(doc_id)
-                out["n_frames"].append(len(frames))
-                out["n_cuts"].append(len(cuts))
-                out["first_cut"].append(cuts[0] if cuts else -1)
-                out["max_diff"].append(max(diffs) if diffs else 0)
-            yield pd.DataFrame(out)
+    def cuts(doc_id, buf):
+        _w, _h, _chroma, frames = decode_y4m(buf)
+        diffs = [int(np.abs(y1.astype(np.int64)
+                            - y0.astype(np.int64)).mean())
+                 for (y0, _, _), (y1, _, _) in zip(frames, frames[1:])]
+        at = [i + 1 for i, d in enumerate(diffs) if d >= threshold]
+        yield (doc_id, len(frames), len(at), at[0] if at else -1,
+               max(diffs) if diffs else 0)
 
-    return media.mapInPandas(run, schema=SCENE_SCHEMA)
+    return row_map(media.select("doc_id", "payload"), cuts, SCENE_SCHEMA)
 
 
 def synthesize_videos_422(docs: DataFrame) -> DataFrame:
     """Round 6: per-doc Y4M payloads at C422 (horizontal-only chroma
     subsample — the broadcast/capture interchange layout) so the
     w/2 x h plane geometry is walked end to end; same closed-form
-    frame colors as synthesize_videos."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 2 * (d % 8 + 1), d % 7 + 1  # odd heights legal
-                n = 3 + d % 5
-                frames = [((d * 7 + i * 31) % 256,
-                           (d * 13 + i * 17) % 256,
-                           (d * 19 + i * 23) % 256) for i in range(n)]
-                payloads.append(encode_y4m(w, h, frames, "422"))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    return docs.select("doc_id").mapInPandas(
-        run, schema="doc_id bigint, payload binary")
+    frame colors as synthesize_videos. Odd heights are legal."""
+    return synthesize(docs, lambda d: encode_y4m(
+        2 * (d % 8 + 1), d % 7 + 1, _y4m_frames(d), "422"))

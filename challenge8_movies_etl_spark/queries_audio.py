@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .operators import audio
+from .operators.rowmap import row_map
 from .registry import query
 from .sources.fixtures import load_table
 
@@ -249,34 +250,23 @@ def q_audio_resample(spark, sf_dir):
     Scale: one Arrow-batched mapInPandas pass, no shuffle; output rows
     are |docs|-sized aggregates, not samples."""
     import numpy as np
-    import pandas as pd
 
     d = load_table(spark, sf_dir, "documents")
     media = audio.synthesize_audio(d)
 
-    def run(batches):
-        for pdf in batches:
-            out = {"doc_id": [], "out_rate": [], "n_out": [],
-                   "peak": [], "mean_abs": []}
-            for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                rate, _channels, ch0 = audio.decode_wav_pcm16(
-                    bytes(buf))
-                m = len(ch0) // 2
-                # numpy // FLOORS negative halves; the oracle
-                # mirrors with floor(sum/2.0) since DuckDB's
-                # integer // truncates toward zero instead
-                y = (ch0[:2 * m:2] + ch0[1:2 * m:2]) // 2
-                out["doc_id"].append(int(doc_id))
-                out["out_rate"].append(rate // 2)
-                out["n_out"].append(m)
-                out["peak"].append(int(np.abs(y).max()))
-                out["mean_abs"].append(
-                    round(float(int(np.abs(y).sum())) / m, 4))
-            yield pd.DataFrame(out)
+    def resample(doc_id, buf):
+        rate, _channels, ch0 = audio.decode_wav_pcm16(buf)
+        m = len(ch0) // 2
+        # numpy // FLOORS negative halves; the oracle mirrors with
+        # floor(sum/2.0) since DuckDB's integer // truncates toward
+        # zero instead
+        y = (ch0[:2 * m:2] + ch0[1:2 * m:2]) // 2
+        yield (doc_id, rate // 2, m, int(np.abs(y).max()),
+               round(float(int(np.abs(y).sum())) / m, 4))
 
-    return media.mapInPandas(
-        run, schema=("doc_id bigint, out_rate bigint, n_out bigint, "
-                     "peak bigint, mean_abs double"))
+    return row_map(media, resample,
+                   "doc_id bigint, out_rate bigint, n_out bigint, "
+                   "peak bigint, mean_abs double")
 
 
 # ---------------------------------------------------------------------------

@@ -12,18 +12,30 @@ task); URL parsing is pure codegen in the scan.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import functions as F
 
 from .operators.containers import (
+    AhoCorasick,
     compress_payload,
     decode_tar,
+    decode_warc,
+    decode_warc_gz,
+    decode_warc_headers,
+    derive_wat,
+    derive_wet,
+    encode_http_chunked,
     encode_tar,
+    encode_warc,
+    encode_warc_gz,
+    parse_http_response,
+    parse_robots,
+    robots_decision,
     sniff_decompress,
     utf8_scan,
+    warc_gz_index,
+    warc_revisit_dedup,
 )
+from .operators.rowmap import row_map
 from .registry import query
 from .sources.fixtures import load_table
 from .session import fan_out_scan
@@ -112,36 +124,18 @@ def q_text_decompress(spark, sf_dir):
     the original — end-to-end proof the decompressed bytes are
     identical, with no decompressor on the oracle side.
 
-    Scale: compress+decompress run in one fused zero-shuffle
-    mapInPandas chain; at 100 TB this is the per-shard ingest path
-    (one shard per task, no driver involvement)."""
+    Scale: compress+decompress run per doc in one zero-shuffle
+    Arrow stage; at 100 TB this is the per-shard ingest path (one
+    shard per task, no driver involvement)."""
     d = load_table(spark, sf_dir, "documents")
 
-    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codec = ("gzip", "bz2", "xz", "zstd")[int(doc_id) % 4]
-                payloads.append(compress_payload(text.encode(), codec))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def roundtrip(doc_id, text):
+        codec, data = sniff_decompress(compress_payload(
+            text.encode(), ("gzip", "bz2", "xz", "zstd")[doc_id % 4]))
+        yield doc_id, codec, data.decode()
 
-    def unpack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "codec": [], "decoded": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                codec, data = sniff_decompress(bytes(payload))
-                out["doc_id"].append(doc_id)
-                out["codec"].append(codec)
-                out["decoded"].append(data.decode())
-            yield pd.DataFrame(out)
-
-    # ONE fused mapInPandas + scan fan-out (optimization round r12,
-    # guide §4): the chained form Arrow-shipped every compressed
-    # payload Python->JVM->Python between the two stages
-    dec = fan_out_scan(d.select("doc_id", "text")).mapInPandas(
-        lambda b: unpack(pack(b)),
-        schema="doc_id bigint, codec string, decoded string")
+    dec = row_map(fan_out_scan(d.select("doc_id", "text")), roundtrip,
+                  "doc_id bigint, codec string, decoded string")
     return dec.select(
         "doc_id", "codec",
         F.length("decoded").cast("long").alias("n_chars"),
@@ -183,41 +177,16 @@ def q_archive_extract(spark, sf_dir):
     Scale: zero-shuffle mapInPandas; archives never leave the task."""
     d = load_table(spark, sf_dir, "documents")
 
-    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id, lang in zip(pdf["doc_id"], pdf["lang"]):
-                did = int(doc_id)
-                m = 1 + did % 3
-                members = [(f"doc{did}/part{j}.txt",
-                            (lang * (5 * (j + 1))).encode())
-                           for j in range(m)]
-                payloads.append(encode_tar(members))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def roundtrip(doc_id, lang):
+        members = decode_tar(encode_tar([
+            (f"doc{doc_id}/part{j}.txt", (lang * (5 * (j + 1))).encode())
+            for j in range(1 + doc_id % 3)]))
+        yield (doc_id, len(members), sum(len(c) for _, c in members),
+               members[-1][0], "".join(c[:2].decode() for _, c in members))
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "n_members": [], "total_bytes": [],
-                   "last_name": [], "head_concat": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                members = decode_tar(bytes(payload))
-                out["doc_id"].append(doc_id)
-                out["n_members"].append(len(members))
-                out["total_bytes"].append(
-                    sum(len(c) for _, c in members))
-                out["last_name"].append(members[-1][0])
-                out["head_concat"].append(
-                    "".join(c[:2].decode() for _, c in members))
-            yield pd.DataFrame(out)
-
-    # ONE fused mapInPandas + scan fan-out (r12, guide §4 — see
-    # q_text_decompress)
-    return fan_out_scan(d.select("doc_id", "lang")).mapInPandas(
-        lambda b: walk(pack(b)),
-        schema=("doc_id bigint, n_members bigint, "
-                "total_bytes bigint, last_name string, "
-                "head_concat string"))
+    return row_map(fan_out_scan(d.select("doc_id", "lang")), roundtrip,
+                   "doc_id bigint, n_members bigint, total_bytes bigint, "
+                   "last_name string, head_concat string")
 
 
 # ---------------------------------------------------------------------------
@@ -257,25 +226,16 @@ def q_text_utf8_validate(spark, sf_dir):
     payload inside the Arrow batch."""
     d = load_table(spark, sf_dir, "documents")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "n_bytes": [], "n_invalid": [],
-                   "n_valid_chars": [], "is_valid": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = bytearray(text.encode())
-                for p in range(0, len(raw), 97):
-                    raw[p] = 0xFF
-                valid, invalid = utf8_scan(bytes(raw))
-                out["doc_id"].append(doc_id)
-                out["n_bytes"].append(len(raw))
-                out["n_invalid"].append(invalid)
-                out["n_valid_chars"].append(valid)
-                out["is_valid"].append(invalid == 0)
-            yield pd.DataFrame(out)
+    def validate(doc_id, text):
+        raw = bytearray(text.encode())
+        for p in range(0, len(raw), 97):
+            raw[p] = 0xFF
+        valid, invalid = utf8_scan(bytes(raw))
+        yield doc_id, len(raw), invalid, valid, invalid == 0
 
-    return d.select("doc_id", "text").mapInPandas(
-        run, schema=("doc_id bigint, n_bytes bigint, n_invalid bigint, "
-                     "n_valid_chars bigint, is_valid boolean"))
+    return row_map(d.select("doc_id", "text"), validate,
+                   "doc_id bigint, n_bytes bigint, n_invalid bigint, "
+                   "n_valid_chars bigint, is_valid boolean")
 
 
 # ---------------------------------------------------------------------------
@@ -561,42 +521,40 @@ def q_blocklist_match(spark, sf_dir):
     (10^4-10^5 patterns) a regex alternation or per-pattern scan pays
     O(patterns) per document, while the automaton pays O(len(text))
     regardless, which is the only shape that survives 100 TB. The
-    automaton is built ONCE per task and streamed over Arrow batches;
-    the oracle recomputes per-pattern counts with replace()
-    arithmetic (the fixture patterns have no self-borders, so
+    automaton is built ONCE, with the query, and ships inside the
+    stage's function, so each task unpickles it once and streams
+    every Arrow batch through it; the oracle recomputes per-pattern
+    counts with replace() arithmetic (the fixture patterns have no self-borders, so
     non-overlapping replace counts equal the automaton's
     overlap-inclusive counts — pinned by the automaton unit tests
     with genuinely overlapping patterns).
 
     Scale: zero shuffle; per-doc output is three integers."""
-    import pandas as pd
-
-    from .operators.containers import AhoCorasick
-
     d = load_table(spark, sf_dir, "documents")
+    ac = AhoCorasick(list(_BLOCK_PATTERNS))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ac = AhoCorasick(list(_BLOCK_PATTERNS))
-        for pdf in batches:
-            out = {"doc_id": [], "n_hits": [], "n_patterns_hit": [],
-                   "max_pattern_hits": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                counts = ac.count(text)
-                out["doc_id"].append(doc_id)
-                out["n_hits"].append(sum(counts))
-                out["n_patterns_hit"].append(
-                    sum(1 for c in counts if c))
-                out["max_pattern_hits"].append(max(counts))
-            yield pd.DataFrame(out)
+    def match(doc_id, text):
+        counts = ac.count(text)
+        yield doc_id, sum(counts), sum(1 for c in counts if c), max(counts)
 
-    return d.select("doc_id", "text").mapInPandas(
-        run, schema=("doc_id bigint, n_hits bigint, "
-                     "n_patterns_hit bigint, max_pattern_hits bigint"))
+    return row_map(d.select("doc_id", "text"), match,
+                   "doc_id bigint, n_hits bigint, "
+                   "n_patterns_hit bigint, max_pattern_hits bigint")
 
 
 # ---------------------------------------------------------------------------
 # q_warc_extract — real WARC/1.0 record parsing (ISO 28500)
 # ---------------------------------------------------------------------------
+
+def _response_records(doc_id: int, lang: str) -> list:
+    """The WARC fixture of q_warc_extract and its .warc.gz siblings: one
+    warcinfo record (17 payload bytes) plus 1 + doc_id%3 responses,
+    response j targeting doc{id}/p{j} with payload lang·5(j+1)."""
+    return [("warcinfo", None, b"software: mvetl\r\n")] + [
+        ("response", f"https://example.com/doc{doc_id}/p{j}",
+         (lang * (5 * (j + 1))).encode())
+        for j in range(1 + doc_id % 3)]
+
 
 @query(
     "q_warc_extract",
@@ -636,49 +594,17 @@ def q_warc_extract(spark, sf_dir):
     shape."""
     d = load_table(spark, sf_dir, "documents")
 
-    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .operators.containers import encode_warc
-        for pdf in batches:
-            payloads = []
-            for doc_id, lang in zip(pdf["doc_id"], pdf["lang"]):
-                did = int(doc_id)
-                m = 1 + did % 3
-                recs = [("warcinfo", None, b"software: mvetl\r\n")]
-                recs += [
-                    ("response",
-                     f"https://example.com/doc{did}/p{j}",
-                     (lang * (5 * (j + 1))).encode())
-                    for j in range(m)]
-                payloads.append(encode_warc(recs))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def roundtrip(doc_id, lang):
+        recs = decode_warc(encode_warc(_response_records(doc_id, lang)))
+        resp = [(u, p) for t, u, p in recs if t == "response"]
+        yield (doc_id, len(recs), len(resp),
+               sum(len(p) for _, _, p in recs), resp[-1][0],
+               "".join(p[:2].decode() for _, p in resp))
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .operators.containers import decode_warc
-        for pdf in batches:
-            out = {"doc_id": [], "n_records": [], "n_response": [],
-                   "payload_bytes": [], "last_uri": [],
-                   "head_concat": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                recs = decode_warc(bytes(payload))
-                resp = [(u, p) for t, u, p in recs if t == "response"]
-                out["doc_id"].append(doc_id)
-                out["n_records"].append(len(recs))
-                out["n_response"].append(len(resp))
-                out["payload_bytes"].append(
-                    sum(len(p) for _, _, p in recs))
-                out["last_uri"].append(resp[-1][0])
-                out["head_concat"].append(
-                    "".join(p[:2].decode() for _, p in resp))
-            yield pd.DataFrame(out)
-
-    # ONE fused mapInPandas + scan fan-out (r12, guide §4 — see
-    # q_text_decompress)
-    return fan_out_scan(d.select("doc_id", "lang")).mapInPandas(
-        lambda b: walk(pack(b)),
-        schema=("doc_id bigint, n_records bigint, "
-                "n_response bigint, payload_bytes bigint, "
-                "last_uri string, head_concat string"))
+    return row_map(fan_out_scan(d.select("doc_id", "lang")), roundtrip,
+                   "doc_id bigint, n_records bigint, n_response bigint, "
+                   "payload_bytes bigint, last_uri string, "
+                   "head_concat string")
 
 
 @query(
@@ -712,43 +638,14 @@ def q_warcgz_extract(spark, sf_dir):
     shard per task, the canonical crawl-ingest unit."""
     d = load_table(spark, sf_dir, "documents")
 
-    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .operators.containers import encode_warc_gz
-        for pdf in batches:
-            payloads = []
-            for doc_id, lang in zip(pdf["doc_id"], pdf["lang"]):
-                did = int(doc_id)
-                m = 1 + did % 3
-                recs = [("warcinfo", None, b"software: mvetl\r\n")]
-                recs += [("response",
-                          f"https://example.com/doc{did}/p{j}",
-                          (lang * (5 * (j + 1))).encode())
-                         for j in range(m)]
-                payloads.append(encode_warc_gz(recs))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def roundtrip(doc_id, lang):
+        recs = decode_warc_gz(encode_warc_gz(_response_records(doc_id, lang)))
+        yield (doc_id, len(recs), sum(len(p) for _, _, p in recs),
+               b"".join(p for t, _, p in recs if t == "response").decode())
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .operators.containers import decode_warc_gz
-        for pdf in batches:
-            out = {"doc_id": [], "n_records": [], "payload_bytes": [],
-                   "resp_concat": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                recs = decode_warc_gz(bytes(payload))
-                out["doc_id"].append(doc_id)
-                out["n_records"].append(len(recs))
-                out["payload_bytes"].append(
-                    sum(len(p) for _, _, p in recs))
-                out["resp_concat"].append(b"".join(
-                    p for t, _, p in recs if t == "response").decode())
-            yield pd.DataFrame(out)
-
-    # ONE fused mapInPandas + scan fan-out (r12, guide §4 — see
-    # q_text_decompress)
-    dec = fan_out_scan(d.select("doc_id", "lang")).mapInPandas(
-        lambda b: walk(pack(b)),
-        schema=("doc_id bigint, n_records bigint, "
-                "payload_bytes bigint, resp_concat string"))
+    dec = row_map(fan_out_scan(d.select("doc_id", "lang")), roundtrip,
+                  "doc_id bigint, n_records bigint, "
+                  "payload_bytes bigint, resp_concat string")
     return dec.select(
         "doc_id", "n_records", "payload_bytes",
         F.md5(F.encode("resp_concat", "utf-8")).alias("resp_digest"))
@@ -788,50 +685,19 @@ def q_warc_cdx_fetch(spark, sf_dir):
     touches `length` compressed bytes, never the shard prefix."""
     d = load_table(spark, sf_dir, "documents")
 
-    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .operators.containers import encode_warc_gz
-        for pdf in batches:
-            payloads = []
-            for doc_id, lang in zip(pdf["doc_id"], pdf["lang"]):
-                did = int(doc_id)
-                m = 1 + did % 3
-                recs = [("warcinfo", None, b"software: mvetl\r\n")]
-                recs += [("response",
-                          f"https://example.com/doc{did}/p{j}",
-                          (lang * (5 * (j + 1))).encode())
-                         for j in range(m)]
-                payloads.append(encode_warc_gz(recs))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def fetch(doc_id, lang):
+        blob = encode_warc_gz(_response_records(doc_id, lang))
+        idx = warc_gz_index(blob)
+        off, length, uri = idx[-1]  # last response member
+        # random access: decode ONLY the sliced member
+        (rtype, ruri, rpayload), = decode_warc_gz(blob[off:off + length])
+        if (ruri, rtype) != (uri, "response"):
+            raise ValueError("CDX fetch mismatch")
+        yield doc_id, len(idx), ruri, len(rpayload), rpayload.decode()
 
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .operators.containers import decode_warc_gz, warc_gz_index
-        for pdf in batches:
-            out = {"doc_id": [], "n_members": [], "fetched_uri": [],
-                   "fetched_bytes": [], "fetched_text": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                blob = bytes(payload)
-                idx = warc_gz_index(blob)
-                off, length, uri = idx[-1]  # last response member
-                # random access: decode ONLY the sliced member
-                (rtype, ruri, rpayload), = decode_warc_gz(
-                    blob[off:off + length])
-                if (ruri, rtype) != (uri, "response"):
-                    raise ValueError("CDX fetch mismatch")
-                out["doc_id"].append(doc_id)
-                out["n_members"].append(len(idx))
-                out["fetched_uri"].append(ruri)
-                out["fetched_bytes"].append(len(rpayload))
-                out["fetched_text"].append(rpayload.decode())
-            yield pd.DataFrame(out)
-
-    # ONE fused mapInPandas + scan fan-out (r12, guide §4 — see
-    # q_text_decompress)
-    dec = fan_out_scan(d.select("doc_id", "lang")).mapInPandas(
-        lambda b: fetch(pack(b)),
-        schema=("doc_id bigint, n_members bigint, "
-                "fetched_uri string, fetched_bytes bigint, "
-                "fetched_text string"))
+    dec = row_map(fan_out_scan(d.select("doc_id", "lang")), fetch,
+                  "doc_id bigint, n_members bigint, fetched_uri string, "
+                  "fetched_bytes bigint, fetched_text string")
     return dec.select(
         "doc_id", "n_members", "fetched_uri", "fetched_bytes",
         F.md5(F.encode("fetched_text", "utf-8")).alias("fetched_digest"))
@@ -870,41 +736,27 @@ def q_robots_decide(spark, sf_dir):
     metadata riding the same partition as the URLs it gates."""
     d = load_table(spark, sf_dir, "documents")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .operators.containers import parse_robots, robots_decision
-        for pdf in batches:
-            out = {"doc_id": [], "bot_probe_allowed": [],
-                   "bot_root_allowed": [], "star_private_allowed": [],
-                   "star_delay": []}
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                txt = (
-                    "# synthetic robots\n"
-                    "User-agent: *\n"
-                    "Disallow: /private/\n"
-                    f"Allow: /private/ok{did % 5}/\n"
-                    f"Crawl-delay: {1 + did % 5}\n"
-                    "\n"
-                    "User-agent: MvEtlBot\n"
-                    f"Disallow: /p/{did % 40}/\n"
-                    "Allow: /p/\n")
-                g = parse_robots(txt)
-                probe, _ = robots_decision(
-                    g, "mvetlbot/2.1", f"/p/{did % 7}/x")
-                root, _ = robots_decision(g, "mvetlbot/2.1", "/p/other")
-                priv, delay = robots_decision(
-                    g, "genericbot", f"/private/ok{did % 3}/f")
-                out["doc_id"].append(doc_id)
-                out["bot_probe_allowed"].append(probe)
-                out["bot_root_allowed"].append(root)
-                out["star_private_allowed"].append(priv)
-                out["star_delay"].append(delay)
-            yield pd.DataFrame(out)
+    def decide(doc_id):
+        g = parse_robots(
+            "# synthetic robots\n"
+            "User-agent: *\n"
+            "Disallow: /private/\n"
+            f"Allow: /private/ok{doc_id % 5}/\n"
+            f"Crawl-delay: {1 + doc_id % 5}\n"
+            "\n"
+            "User-agent: MvEtlBot\n"
+            f"Disallow: /p/{doc_id % 40}/\n"
+            "Allow: /p/\n")
+        probe, _ = robots_decision(g, "mvetlbot/2.1", f"/p/{doc_id % 7}/x")
+        root, _ = robots_decision(g, "mvetlbot/2.1", "/p/other")
+        priv, delay = robots_decision(
+            g, "genericbot", f"/private/ok{doc_id % 3}/f")
+        yield doc_id, probe, root, priv, delay
 
-    return d.select("doc_id").mapInPandas(
-        run, schema=("doc_id bigint, bot_probe_allowed boolean, "
-                     "bot_root_allowed boolean, "
-                     "star_private_allowed boolean, star_delay bigint"))
+    return row_map(d.select("doc_id"), decide,
+                   "doc_id bigint, bot_probe_allowed boolean, "
+                   "bot_root_allowed boolean, "
+                   "star_private_allowed boolean, star_delay bigint")
 
 
 @query(
@@ -985,43 +837,18 @@ def q_http_dechunk(spark, sf_dir):
     ingest decode path, parallelism == partitions."""
     d = load_table(spark, sf_dir, "documents")
 
-    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .operators.containers import (encode_http_chunked,
-                                           encode_warc_gz)
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(doc_id)
-                http = encode_http_chunked(
-                    200, [("Content-Type", "text/plain")],
-                    text.encode(), chunk_size=16 + did % 49)
-                payloads.append(encode_warc_gz(
-                    [("response",
-                      f"https://example.com/doc{did}", http)]))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def roundtrip(doc_id, text):
+        http = encode_http_chunked(
+            200, [("Content-Type", "text/plain")], text.encode(),
+            chunk_size=16 + doc_id % 49)
+        (_, _, http), = decode_warc_gz(encode_warc_gz(
+            [("response", f"https://example.com/doc{doc_id}", http)]))
+        status, hdrs, body = parse_http_response(http)
+        yield doc_id, status, hdrs["content-type"], body.decode()
 
-    def unpack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .operators.containers import (decode_warc_gz,
-                                           parse_http_response)
-        for pdf in batches:
-            out = {"doc_id": [], "status": [], "content_type": [],
-                   "body": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                (_, _, http), = decode_warc_gz(bytes(payload))
-                status, hdrs, body = parse_http_response(http)
-                out["doc_id"].append(doc_id)
-                out["status"].append(status)
-                out["content_type"].append(hdrs["content-type"])
-                out["body"].append(body.decode())
-            yield pd.DataFrame(out)
-
-    # ONE fused mapInPandas + scan fan-out (r12, guide §4 — see
-    # q_text_decompress)
-    dec = fan_out_scan(d.select("doc_id", "text")).mapInPandas(
-        lambda b: unpack(pack(b)),
-        schema=("doc_id bigint, status int, "
-                "content_type string, body string"))
+    dec = row_map(fan_out_scan(d.select("doc_id", "text")), roundtrip,
+                  "doc_id bigint, status int, "
+                  "content_type string, body string")
     return dec.select(
         "doc_id", "status", "content_type",
         F.length("body").cast("long").alias("n_bytes"),
@@ -1150,7 +977,7 @@ def q_json_quarantine(spark, sf_dir):
 # both real ISO 28500 blobs readable by decode_warc.
 # ---------------------------------------------------------------------------
 
-def _pack_http_warc_batch(pdf: pd.DataFrame) -> list[bytes]:
+def _http_warc(doc_id: int, text: str) -> bytes:
     """Shared WET/WAT fixture: per doc a WARC with one warcinfo, m =
     1 + doc_id%3 HTTP 200 text/html responses (response j wraps the
     doc text in a small page; framing alternates plain `chunked` and
@@ -1160,8 +987,6 @@ def _pack_http_warc_batch(pdf: pd.DataFrame) -> list[bytes]:
     DESCRIBE (WAT) non-content records correctly."""
     import zlib
 
-    from .operators.containers import encode_http_chunked, encode_warc
-
     def chunked(body: bytes, size: int = 96) -> bytes:
         out = bytearray()
         for i in range(0, len(body), size):
@@ -1169,33 +994,28 @@ def _pack_http_warc_batch(pdf: pd.DataFrame) -> list[bytes]:
             out += b"%x\r\n" % len(c) + c + b"\r\n"
         return bytes(out + b"0\r\n\r\n")
 
-    payloads = []
-    for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-        did = int(doc_id)
-        m = 1 + did % 3
-        recs = [("warcinfo", None, b"software: mvetl\r\n")]
-        for j in range(m):
-            html = (f"<html><head><title>d{did}</title>"
-                    f"<script>var j={j};</script></head>"
-                    f"<body><p>{text} #{j}</p></body></html>").encode()
-            uri = f"https://example.com/doc{did}/p{j}"
-            if (did + j) % 2 == 0:
-                raw = encode_http_chunked(
-                    200, [("Content-Type", "text/html")], html, 96)
-            else:
-                gz = zlib.compress(html, 1, wbits=31)
-                raw = (b"HTTP/1.1 200 OK\r\n"
-                       b"Content-Type: text/html\r\n"
-                       b"Transfer-Encoding: gzip, chunked\r\n\r\n"
-                       + chunked(gz))
-            recs.append(("response", uri, raw))
-        recs.append(("request", f"https://example.com/doc{did}/req",
-                     b"GET / HTTP/1.1\r\nHost: example.com\r\n\r\n"))
-        recs.append(("response", f"https://example.com/doc{did}/missing",
-                     b"HTTP/1.1 404 Not Found\r\nContent-Length: 9"
-                     b"\r\n\r\nnot found"))
-        payloads.append(encode_warc(recs))
-    return payloads
+    recs = [("warcinfo", None, b"software: mvetl\r\n")]
+    for j in range(1 + doc_id % 3):
+        html = (f"<html><head><title>d{doc_id}</title>"
+                f"<script>var j={j};</script></head>"
+                f"<body><p>{text} #{j}</p></body></html>").encode()
+        uri = f"https://example.com/doc{doc_id}/p{j}"
+        if (doc_id + j) % 2 == 0:
+            raw = encode_http_chunked(
+                200, [("Content-Type", "text/html")], html, 96)
+        else:
+            gz = zlib.compress(html, 1, wbits=31)
+            raw = (b"HTTP/1.1 200 OK\r\n"
+                   b"Content-Type: text/html\r\n"
+                   b"Transfer-Encoding: gzip, chunked\r\n\r\n"
+                   + chunked(gz))
+        recs.append(("response", uri, raw))
+    recs.append(("request", f"https://example.com/doc{doc_id}/req",
+                 b"GET / HTTP/1.1\r\nHost: example.com\r\n\r\n"))
+    recs.append(("response", f"https://example.com/doc{doc_id}/missing",
+                 b"HTTP/1.1 404 Not Found\r\nContent-Length: 9"
+                 b"\r\n\r\nnot found"))
+    return encode_warc(recs)
 
 
 _HTML_LEN_SQL = (
@@ -1240,41 +1060,28 @@ def q_wet_extract(spark, sf_dir):
     source WARC must be FILTERED (a type or status slip changes the
     digest); a dechunk/gunzip slip corrupts every text.
 
-    Scale: ONE fused zero-shuffle Arrow-batched mapInPandas —
-    pack → derive → re-walk in a single Python pass per shard (two
-    chained stages Arrow-shipped every WARC payload Python→JVM→
-    Python for no reason: measured 1.15 s vs 0.7 s of actual work at
-    sf0.1); one shard per task, the literal shape of Common Crawl's
-    wet-derivation jobs at 100 TB."""
+    Scale: ONE zero-shuffle Arrow stage — pack → derive → re-walk
+    per doc in a single Python pass, so no WARC payload crosses
+    between Python and the JVM; one shard per task, the literal shape
+    of Common Crawl's wet-derivation jobs at 100 TB."""
     import hashlib
 
     d = load_table(spark, sf_dir, "documents")
 
-    def wet(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .operators.containers import decode_warc, derive_wet
-        for pdf in batches:
-            out = {"doc_id": [], "n_conversion": [], "text_octets": [],
-                   "digest": [], "last_uri": []}
-            for doc_id, payload in zip(pdf["doc_id"],
-                                       _pack_http_warc_batch(pdf)):
-                recs = decode_warc(derive_wet(payload))
-                conv = [(u, p) for t, u, p in recs if t == "conversion"]
-                texts = [p.decode() for _, p in conv]
-                out["doc_id"].append(doc_id)
-                out["n_conversion"].append(len(conv))
-                out["text_octets"].append(sum(len(t) for t in texts))
-                out["digest"].append(
-                    hashlib.md5("".join(texts).encode()).hexdigest())
-                out["last_uri"].append(conv[-1][0])
-            yield pd.DataFrame(out)
+    def wet(doc_id, text):
+        recs = decode_warc(derive_wet(_http_warc(doc_id, text)))
+        conv = [(u, p) for t, u, p in recs if t == "conversion"]
+        texts = [p.decode() for _, p in conv]
+        yield (doc_id, len(conv), sum(len(t) for t in texts),
+               hashlib.md5("".join(texts).encode()).hexdigest(),
+               conv[-1][0])
 
     # tiny projection, explicit fan-out: one local parquet file is
     # ONE input split, which would serialize the whole derive chain
     # onto a single task (at 100 TB the shard count provides this)
-    return fan_out_scan(d.select("doc_id", "text")).mapInPandas(
-        wet, schema=("doc_id bigint, n_conversion bigint, "
-                     "text_octets bigint, digest string, "
-                     "last_uri string"))
+    return row_map(fan_out_scan(d.select("doc_id", "text")), wet,
+                   "doc_id bigint, n_conversion bigint, "
+                   "text_octets bigint, digest string, last_uri string")
 
 
 @query(
@@ -1323,37 +1130,25 @@ def q_wat_extract(spark, sf_dir):
     envelope byte-for-byte in SQL, warcinfo and request and 404
     included — one mis-described record breaks the digest.
 
-    Scale: ONE fused zero-shuffle Arrow-batched mapInPandas (pack →
-    derive → re-walk in a single Python pass — see q_wet_extract),
-    shard-per-task."""
+    Scale: ONE zero-shuffle Arrow stage (pack → derive → re-walk in a
+    single Python pass — see q_wet_extract), shard-per-task."""
     import hashlib
 
     d = load_table(spark, sf_dir, "documents")
 
-    def wat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .operators.containers import decode_warc, derive_wat
-        for pdf in batches:
-            out = {"doc_id": [], "n_metadata": [], "n_http200": [],
-                   "digest": []}
-            for doc_id, payload in zip(pdf["doc_id"],
-                                       _pack_http_warc_batch(pdf)):
-                recs = decode_warc(derive_wat(payload))
-                envs = [p.decode() for t, _, p in recs
-                        if t == "metadata"]
-                # envelopes are byte-deterministic (sorted keys,
-                # compact separators) so the literal substring test
-                # is exact — no per-envelope json parse needed
-                n200 = sum(1 for e in envs if '"status":200' in e)
-                out["doc_id"].append(doc_id)
-                out["n_metadata"].append(len(envs))
-                out["n_http200"].append(n200)
-                out["digest"].append(
-                    hashlib.md5("".join(envs).encode()).hexdigest())
-            yield pd.DataFrame(out)
+    def wat(doc_id, text):
+        recs = decode_warc(derive_wat(_http_warc(doc_id, text)))
+        envs = [p.decode() for t, _, p in recs if t == "metadata"]
+        # envelopes are byte-deterministic (sorted keys, compact
+        # separators) so the literal substring test is exact — no
+        # per-envelope json parse needed
+        yield (doc_id, len(envs),
+               sum(1 for e in envs if '"status":200' in e),
+               hashlib.md5("".join(envs).encode()).hexdigest())
 
-    return fan_out_scan(d.select("doc_id", "text")).mapInPandas(
-        wat, schema=("doc_id bigint, n_metadata bigint, "
-                     "n_http200 bigint, digest string"))
+    return row_map(fan_out_scan(d.select("doc_id", "text")), wat,
+                   "doc_id bigint, n_metadata bigint, "
+                   "n_http200 bigint, digest string")
 
 
 # ---------------------------------------------------------------------------
@@ -1388,47 +1183,32 @@ def q_robots_wildcard(spark, sf_dir):
     metadata riding the partition of the URLs it gates."""
     d = load_table(spark, sf_dir, "documents")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .operators.containers import parse_robots, robots_decision
-        for pdf in batches:
-            out = {"doc_id": [], "allow_ext": [], "allow_mid": [],
-                   "bot_tail_allowed": [], "bot_keep_allowed": [],
-                   "bot_delay": []}
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                txt = ("User-agent: *\n"
-                       "Disallow: /*.bin$\n"
-                       "Disallow: /t/*/x\n"
-                       "Allow: /t/pub/x\n"
-                       "\n"
-                       "User-agent: MvEtlBot\n"
-                       f"Disallow: /d/*{did % 10}$\n"
-                       "\n"
-                       "User-agent: mvetlbot\n"
-                       "Allow: /d/keep*\n"
-                       f"Crawl-delay: {1 + did % 4}\n")
-                g = parse_robots(txt)
-                ext_path = "/a.bin" if did % 3 == 0 else "/a.binx"
-                mid_dir = "pub" if did % 4 == 0 else str(did % 4)
-                ext, _ = robots_decision(g, "genericbot", ext_path)
-                mid, _ = robots_decision(g, "genericbot",
-                                         f"/t/{mid_dir}/x")
-                tail, delay = robots_decision(
-                    g, "mvetlbot/2.1", f"/d/f{did % 7}")
-                keep, _ = robots_decision(
-                    g, "mvetlbot/2.1", f"/d/keep{did % 10}")
-                out["doc_id"].append(doc_id)
-                out["allow_ext"].append(ext)
-                out["allow_mid"].append(mid)
-                out["bot_tail_allowed"].append(tail)
-                out["bot_keep_allowed"].append(keep)
-                out["bot_delay"].append(delay)
-            yield pd.DataFrame(out)
+    def decide(doc_id):
+        g = parse_robots("User-agent: *\n"
+                         "Disallow: /*.bin$\n"
+                         "Disallow: /t/*/x\n"
+                         "Allow: /t/pub/x\n"
+                         "\n"
+                         "User-agent: MvEtlBot\n"
+                         f"Disallow: /d/*{doc_id % 10}$\n"
+                         "\n"
+                         "User-agent: mvetlbot\n"
+                         "Allow: /d/keep*\n"
+                         f"Crawl-delay: {1 + doc_id % 4}\n")
+        ext_path = "/a.bin" if doc_id % 3 == 0 else "/a.binx"
+        mid_dir = "pub" if doc_id % 4 == 0 else str(doc_id % 4)
+        ext, _ = robots_decision(g, "genericbot", ext_path)
+        mid, _ = robots_decision(g, "genericbot", f"/t/{mid_dir}/x")
+        tail, delay = robots_decision(
+            g, "mvetlbot/2.1", f"/d/f{doc_id % 7}")
+        keep, _ = robots_decision(
+            g, "mvetlbot/2.1", f"/d/keep{doc_id % 10}")
+        yield doc_id, ext, mid, tail, keep, delay
 
-    return d.select("doc_id").mapInPandas(
-        run, schema=("doc_id bigint, allow_ext boolean, "
-                     "allow_mid boolean, bot_tail_allowed boolean, "
-                     "bot_keep_allowed boolean, bot_delay bigint"))
+    return row_map(d.select("doc_id"), decide,
+                   "doc_id bigint, allow_ext boolean, "
+                   "allow_mid boolean, bot_tail_allowed boolean, "
+                   "bot_keep_allowed boolean, bot_delay bigint")
 
 
 # ---------------------------------------------------------------------------
@@ -1477,34 +1257,22 @@ def q_frontier_robots(spark, sf_dir):
 
     d = load_table(spark, sf_dir, "documents")
 
-    def admit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .operators.containers import parse_robots, robots_decision
-        for pdf in batches:
-            out = {"doc_id": [], "host": [], "priority": [],
-                   "delay_s": []}
-            robots_cache: dict[int, object] = {}
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                h = did % 20
-                if h not in robots_cache:
-                    robots_cache[h] = parse_robots(
-                        "User-agent: *\n"
-                        f"Disallow: /p/{h % 7}/\n"
-                        f"Crawl-delay: {1 + h % 5}\n")
-                ok, delay = robots_decision(
-                    robots_cache[h], "mvetlbot/2.1",
-                    f"/p/{did % 40}/x")
-                if not ok:
-                    continue
-                out["doc_id"].append(doc_id)
-                out["host"].append(f"src{h}.example.com")
-                out["priority"].append(did % 100)
-                out["delay_s"].append(delay)
-            yield pd.DataFrame(out)
+    robots = {}  # host -> parsed robots.txt, filled once per task
 
-    admitted = d.select("doc_id").mapInPandas(
-        admit, schema=("doc_id bigint, host string, priority bigint, "
-                       "delay_s bigint"))
+    def admit(doc_id):
+        h = doc_id % 20
+        if h not in robots:
+            robots[h] = parse_robots("User-agent: *\n"
+                                     f"Disallow: /p/{h % 7}/\n"
+                                     f"Crawl-delay: {1 + h % 5}\n")
+        ok, delay = robots_decision(
+            robots[h], "mvetlbot/2.1", f"/p/{doc_id % 40}/x")
+        if ok:
+            yield doc_id, f"src{h}.example.com", doc_id % 100, delay
+
+    admitted = row_map(d.select("doc_id"), admit,
+                       "doc_id bigint, host string, priority bigint, "
+                       "delay_s bigint")
     w = W.partitionBy("host").orderBy(F.col("priority").desc(),
                                       "doc_id")
     rn = F.row_number().over(w) - 1
@@ -1554,59 +1322,37 @@ def q_warc_revisit(spark, sf_dir):
     the sha256 digests itself, so a digest, ordering, or
     first-occurrence slip breaks the hash.
 
-    Scale: the shard is the dedup scope — per-task state, ONE fused
-    zero-shuffle mapInPandas (pack → dedup → re-walk in a single
-    Python pass, see q_wet_extract); cross-shard dedup is the
-    downstream exact-dedup join."""
+    Scale: the shard is the dedup scope — ONE zero-shuffle Arrow
+    stage (pack → dedup → re-walk in a single Python pass, see
+    q_wet_extract); cross-shard dedup is the downstream exact-dedup
+    join."""
     import hashlib
 
     d = load_table(spark, sf_dir, "documents")
 
-    def dedup(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .operators.containers import (decode_warc_headers,
-                                           encode_warc,
-                                           warc_revisit_dedup)
-        for pdf in batches:
-            out = {"doc_id": [], "n_records": [], "n_kept": [],
-                   "n_revisit": [], "saved_octets": [],
-                   "ref_digest": []}
-            for doc_id, lang in zip(pdf["doc_id"], pdf["lang"]):
-                did = int(doc_id)
-                m = 2 + did % 3
-                src = [("warcinfo", None, b"software: mvetl\r\n")]
-                src += [("response",
-                         f"https://example.com/doc{did}/p{j}",
-                         (lang * (3 + 2 * (j % 2))).encode())
-                        for j in range(m)]
-                recs = decode_warc_headers(
-                    warc_revisit_dedup(encode_warc(src)))
-                kept = [(h, p) for h, p in recs
-                        if h["WARC-Type"] == "response"]
-                rev = [h for h, _ in recs
-                       if h["WARC-Type"] == "revisit"]
-                # octets saved = the original payload sizes of the
-                # revisits; recover them from the kept copy each
-                # revisit's digest points at (a real consumer's move)
-                by_digest = {
-                    "sha256:" + hashlib.sha256(p).hexdigest(): len(p)
-                    for _, p in kept}
-                saved = sum(by_digest[h["WARC-Payload-Digest"]]
-                            for h in rev)
-                ref = "".join(h["WARC-Refers-To-Target-URI"]
-                              + h["WARC-Payload-Digest"] for h in rev)
-                out["doc_id"].append(doc_id)
-                out["n_records"].append(len(recs))
-                out["n_kept"].append(len(kept))
-                out["n_revisit"].append(len(rev))
-                out["saved_octets"].append(saved)
-                out["ref_digest"].append(
-                    hashlib.md5(ref.encode()).hexdigest())
-            yield pd.DataFrame(out)
+    def dedup(doc_id, lang):
+        src = [("warcinfo", None, b"software: mvetl\r\n")]
+        src += [("response", f"https://example.com/doc{doc_id}/p{j}",
+                 (lang * (3 + 2 * (j % 2))).encode())
+                for j in range(2 + doc_id % 3)]
+        recs = decode_warc_headers(warc_revisit_dedup(encode_warc(src)))
+        kept = [(h, p) for h, p in recs if h["WARC-Type"] == "response"]
+        rev = [h for h, _ in recs if h["WARC-Type"] == "revisit"]
+        # octets saved = the original payload sizes of the revisits;
+        # recover them from the kept copy each revisit's digest points
+        # at (a real consumer's move)
+        by_digest = {"sha256:" + hashlib.sha256(p).hexdigest(): len(p)
+                     for _, p in kept}
+        saved = sum(by_digest[h["WARC-Payload-Digest"]] for h in rev)
+        ref = "".join(h["WARC-Refers-To-Target-URI"]
+                      + h["WARC-Payload-Digest"] for h in rev)
+        yield (doc_id, len(recs), len(kept), len(rev), saved,
+               hashlib.md5(ref.encode()).hexdigest())
 
-    return fan_out_scan(d.select("doc_id", "lang")).mapInPandas(
-        dedup, schema=("doc_id bigint, n_records bigint, "
-                       "n_kept bigint, n_revisit bigint, "
-                       "saved_octets bigint, ref_digest string"))
+    return row_map(fan_out_scan(d.select("doc_id", "lang")), dedup,
+                   "doc_id bigint, n_records bigint, n_kept bigint, "
+                   "n_revisit bigint, saved_octets bigint, "
+                   "ref_digest string")
 
 
 # ---------------------------------------------------------------------------

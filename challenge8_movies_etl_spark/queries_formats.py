@@ -11,19 +11,17 @@ operators/exif.py), and the DuckDB oracle re-derives the expected
 output in closed form — so a hash match proves the full encode→decode
 loop is lossless with no decoder on the oracle side.
 
-Scale: all three are zero-shuffle fused mapInPandas chains (encode and
-decode in the SAME task, one Arrow batch resident); at 100 TB each
+Scale: each is one zero-shuffle Arrow stage (encode and decode per
+row in the SAME task, one Arrow batch resident); at 100 TB each
 shard decodes independently — parallelism == partition count, no
 driver involvement, no skew coupling.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import functions as F
 
+from .operators.rowmap import row_map
 from .registry import query
 from .sources.fixtures import load_table
 
@@ -60,39 +58,26 @@ def q_zip_extract(spark, sf_dir):
     text — equality proves chunking + deflate + CRC round-trip
     losslessly. n_deflate's closed form (m + parity) // 2 counts the
     alternating methods."""
+    from .operators.containers import decode_zip, encode_zip
+
     d = load_table(spark, sf_dir, "documents")
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .operators.containers import decode_zip, encode_zip
-        for pdf in batches:
-            out = {"doc_id": [], "n_members": [], "n_deflate": [],
-                   "total_bytes": [], "last_name": [], "joined": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                doc_id = int(doc_id)
-                raw = text.encode()
-                m = 1 + doc_id % 3
-                bounds = [len(raw) * i // m for i in range(m + 1)]
-                members = [
-                    (f"doc{doc_id}/part{i}.txt",
-                     raw[bounds[i]:bounds[i + 1]],
-                     "deflate" if (doc_id + i) % 2 else "stored")
-                    for i in range(m)]
-                got = decode_zip(encode_zip(members))
-                out["doc_id"].append(doc_id)
-                out["n_members"].append(len(got))
-                out["n_deflate"].append(
-                    sum(meth == "deflate" for _, meth, _ in got))
-                out["total_bytes"].append(
-                    sum(len(c) for _, _, c in got))
-                out["last_name"].append(got[-1][0])
-                out["joined"].append(
-                    b"".join(c for _, _, c in got).decode())
-            yield pd.DataFrame(out)
+    def roundtrip(doc_id, text):
+        raw = text.encode()
+        m = 1 + doc_id % 3
+        bounds = [len(raw) * i // m for i in range(m + 1)]
+        got = decode_zip(encode_zip([
+            (f"doc{doc_id}/part{i}.txt", raw[bounds[i]:bounds[i + 1]],
+             "deflate" if (doc_id + i) % 2 else "stored")
+            for i in range(m)]))
+        yield (doc_id, len(got),
+               sum(meth == "deflate" for _, meth, _ in got),
+               sum(len(c) for _, _, c in got), got[-1][0],
+               b"".join(c for _, _, c in got).decode())
 
-    dec = d.select("doc_id", "text").mapInPandas(
-        roundtrip,
-        schema="doc_id bigint, n_members bigint, n_deflate bigint, "
-               "total_bytes bigint, last_name string, joined string")
+    dec = row_map(d.select("doc_id", "text"), roundtrip,
+                  "doc_id bigint, n_members bigint, n_deflate bigint, "
+                  "total_bytes bigint, last_name string, joined string")
     return dec.select(
         "doc_id", "n_members", "n_deflate", "total_bytes", "last_name",
         F.md5(F.encode("joined", "utf-8")).alias("digest"))
@@ -133,37 +118,23 @@ def q_avro_extract(spark, sf_dir):
     =2 forces multi-block files so the sync-marker path is exercised on
     every doc with k>2. The oracle regenerates the records relationally
     — a hash match pins varint/zigzag/double encoding end to end."""
+    from .operators.avro import decode_ocf, encode_ocf
+
     d = load_table(spark, sf_dir, "documents")
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .operators.avro import decode_ocf, encode_ocf
-        for pdf in batches:
-            out = {"doc_id": [], "codec": [], "rec_idx": [],
-                   "rid": [], "name": [], "value": []}
-            for doc_id, lang, n_chars in zip(
-                    pdf["doc_id"], pdf["lang"], pdf["n_chars"]):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                k = 1 + doc_id % 4
-                codec = "deflate" if doc_id % 2 else "null"
-                recs = [{"rid": doc_id * 10 + i,
-                         "name": f"{lang}-{i}",
-                         "value": float(n_chars + i) + 0.25}
-                        for i in range(k)]
-                _, got_codec, got = decode_ocf(
-                    encode_ocf(_AVRO_SCHEMA, recs, codec, block_size=2))
-                for i, rec in enumerate(got):
-                    out["doc_id"].append(doc_id)
-                    out["codec"].append(got_codec)
-                    out["rec_idx"].append(i)
-                    out["rid"].append(rec["rid"])
-                    out["name"].append(rec["name"])
-                    out["value"].append(rec["value"])
-            yield pd.DataFrame(out)
+    def roundtrip(doc_id, lang, n_chars):
+        recs = [{"rid": doc_id * 10 + i, "name": f"{lang}-{i}",
+                 "value": float(n_chars + i) + 0.25}
+                for i in range(1 + doc_id % 4)]
+        _, codec, got = decode_ocf(encode_ocf(
+            _AVRO_SCHEMA, recs, "deflate" if doc_id % 2 else "null",
+            block_size=2))
+        for i, rec in enumerate(got):
+            yield doc_id, codec, i, rec["rid"], rec["name"], rec["value"]
 
-    return d.select("doc_id", "lang", "n_chars").mapInPandas(
-        roundtrip,
-        schema="doc_id bigint, codec string, rec_idx bigint, "
-               "rid bigint, name string, value double")
+    return row_map(d.select("doc_id", "lang", "n_chars"), roundtrip,
+                   "doc_id bigint, codec string, rec_idx bigint, "
+                   "rid bigint, name string, value double")
 
 
 # ---------------------------------------------------------------------------
@@ -198,45 +169,31 @@ def q_image_exif(spark, sf_dir):
     The oracle recomputes each field's closed form; a hash match pins
     offset arithmetic and byte-order handling across the whole fleet
     of tags."""
+    from .operators.exif import (
+        TAG_DATETIME, TAG_EXPOSURE, TAG_HEIGHT, TAG_ISO, TAG_MAKE,
+        TAG_ORIENTATION, TAG_WIDTH, build_exif, parse_exif)
+
     d = load_table(spark, sf_dir, "documents")
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .operators.exif import (
-            TAG_DATETIME, TAG_EXPOSURE, TAG_HEIGHT, TAG_ISO, TAG_MAKE,
-            TAG_ORIENTATION, TAG_WIDTH, build_exif, parse_exif)
-        for pdf in batches:
-            out = {"doc_id": [], "byte_order": [], "width": [],
-                   "height": [], "make": [], "taken_at": [],
-                   "orientation": [], "exposure_den": [], "iso": []}
-            for doc_id, source in zip(pdf["doc_id"], pdf["source"]):
-                doc_id = int(doc_id)
-                be = doc_id % 2 == 1
-                blob = build_exif(
-                    big_endian=be,
-                    width=320 + (doc_id % 8) * 16,
-                    height=240 + (doc_id % 6) * 20,
-                    make=f"cam-{source}",
-                    datetime=f"2024:01:{1 + doc_id % 28:02d} 12:30:45",
-                    orientation=1 + doc_id % 8,
-                    exposure=(1, 30 + doc_id % 200),
-                    iso=100 * (1 + doc_id % 8))
-                tags = parse_exif(blob)
-                out["doc_id"].append(doc_id)
-                out["byte_order"].append("MM" if be else "II")
-                out["width"].append(tags[TAG_WIDTH])
-                out["height"].append(tags[TAG_HEIGHT])
-                out["make"].append(tags[TAG_MAKE])
-                out["taken_at"].append(tags[TAG_DATETIME])
-                out["orientation"].append(tags[TAG_ORIENTATION])
-                out["exposure_den"].append(tags[TAG_EXPOSURE][1])
-                out["iso"].append(tags[TAG_ISO])
-            yield pd.DataFrame(out)
+    def roundtrip(doc_id, source):
+        be = doc_id % 2 == 1
+        tags = parse_exif(build_exif(
+            big_endian=be,
+            width=320 + (doc_id % 8) * 16,
+            height=240 + (doc_id % 6) * 20,
+            make=f"cam-{source}",
+            datetime=f"2024:01:{1 + doc_id % 28:02d} 12:30:45",
+            orientation=1 + doc_id % 8,
+            exposure=(1, 30 + doc_id % 200),
+            iso=100 * (1 + doc_id % 8)))
+        yield (doc_id, "MM" if be else "II", tags[TAG_WIDTH],
+               tags[TAG_HEIGHT], tags[TAG_MAKE], tags[TAG_DATETIME],
+               tags[TAG_ORIENTATION], tags[TAG_EXPOSURE][1], tags[TAG_ISO])
 
-    return d.select("doc_id", "source").mapInPandas(
-        roundtrip,
-        schema="doc_id bigint, byte_order string, width bigint, "
-               "height bigint, make string, taken_at string, "
-               "orientation bigint, exposure_den bigint, iso bigint")
+    return row_map(d.select("doc_id", "source"), roundtrip,
+                   "doc_id bigint, byte_order string, width bigint, "
+                   "height bigint, make string, taken_at string, "
+                   "orientation bigint, exposure_den bigint, iso bigint")
 
 
 # ---------------------------------------------------------------------------
@@ -271,46 +228,31 @@ def q_protobuf_extract(spark, sf_dir):
     newer writer) are part of the checked contract, not just a
     tolerated accident. The oracle recomputes every field's closed
     form relationally."""
+    from .operators.proto import decode_docmeta, encode_docmeta
+
     d = load_table(spark, sf_dir, "documents")
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .operators.proto import decode_docmeta, encode_docmeta
-        for pdf in batches:
-            out = {"doc_id": [], "delta": [], "lang": [], "score": [],
-                   "tag_sum": [], "n_tags": [], "hash64": [],
-                   "sub_a": [], "sub_b": [], "n_unknown": []}
-            for doc_id, lang, source, n_chars in zip(
-                    pdf["doc_id"], pdf["lang"], pdf["source"],
-                    pdf["n_chars"]):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                blob = encode_docmeta(
-                    id=doc_id,
-                    delta=500 - doc_id % 1000,
-                    lang=lang,
-                    score=n_chars + 0.5,
-                    tags=[doc_id % 10, doc_id % 100, doc_id % 1000],
-                    hash64=doc_id * 1000003 + 7,
-                    sub_a=doc_id % 50,
-                    sub_b=source,
-                    unknown7=(b"future" if doc_id % 3 == 0 else None))
-                rec = decode_docmeta(blob)
-                out["doc_id"].append(rec["id"])
-                out["delta"].append(rec["delta"])
-                out["lang"].append(rec["lang"])
-                out["score"].append(rec["score"])
-                out["tag_sum"].append(sum(rec["tags"]))
-                out["n_tags"].append(len(rec["tags"]))
-                out["hash64"].append(rec["hash64"])
-                out["sub_a"].append(rec["sub_a"])
-                out["sub_b"].append(rec["sub_b"])
-                out["n_unknown"].append(rec["n_unknown"])
-            yield pd.DataFrame(out)
+    def roundtrip(doc_id, lang, source, n_chars):
+        rec = decode_docmeta(encode_docmeta(
+            id=doc_id,
+            delta=500 - doc_id % 1000,
+            lang=lang,
+            score=n_chars + 0.5,
+            tags=[doc_id % 10, doc_id % 100, doc_id % 1000],
+            hash64=doc_id * 1000003 + 7,
+            sub_a=doc_id % 50,
+            sub_b=source,
+            unknown7=(b"future" if doc_id % 3 == 0 else None)))
+        yield (rec["id"], rec["delta"], rec["lang"], rec["score"],
+               sum(rec["tags"]), len(rec["tags"]), rec["hash64"],
+               rec["sub_a"], rec["sub_b"], rec["n_unknown"])
 
-    return d.select("doc_id", "lang", "source", "n_chars").mapInPandas(
-        roundtrip,
-        schema="doc_id bigint, delta bigint, lang string, score double, "
-               "tag_sum bigint, n_tags bigint, hash64 bigint, "
-               "sub_a bigint, sub_b string, n_unknown int")
+    return row_map(d.select("doc_id", "lang", "source", "n_chars"),
+                   roundtrip,
+                   "doc_id bigint, delta bigint, lang string, "
+                   "score double, tag_sum bigint, n_tags bigint, "
+                   "hash64 bigint, sub_a bigint, sub_b string, "
+                   "n_unknown int")
 
 
 # ---------------------------------------------------------------------------
@@ -358,40 +300,26 @@ def q_cbor_extract(spark, sf_dir):
     nbytes column is the SERIALIZED SIZE recomputed in closed form by
     the oracle: a hash match therefore pins not just the values but
     the shortest-form encoding rules byte for byte."""
+    from .operators.cbor import decode, encode
+
     d = load_table(spark, sf_dir, "documents")
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .operators.cbor import decode, encode
-        for pdf in batches:
-            out = {"doc_id": [], "lang": [], "n": [], "f16": [],
-                   "dbl": [], "tag0": [], "tag1": [], "ok": [],
-                   "nbytes": []}
-            for doc_id, lang, n_chars in zip(
-                    pdf["doc_id"], pdf["lang"], pdf["n_chars"]):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                blob = encode({
-                    "id": doc_id, "lang": lang, "n": n_chars,
-                    "f16": doc_id % 16 + 0.5,
-                    "dbl": n_chars + 0.1,
-                    "tags": [doc_id % 5, -(doc_id % 7) - 1],
-                    "ok": doc_id % 2 == 0})
-                rec = decode(blob)
-                out["doc_id"].append(rec["id"])
-                out["lang"].append(rec["lang"])
-                out["n"].append(rec["n"])
-                out["f16"].append(rec["f16"])
-                out["dbl"].append(rec["dbl"])
-                out["tag0"].append(rec["tags"][0])
-                out["tag1"].append(rec["tags"][1])
-                out["ok"].append(1 if rec["ok"] else 0)
-                out["nbytes"].append(len(blob))
-            yield pd.DataFrame(out)
+    def roundtrip(doc_id, lang, n_chars):
+        blob = encode({
+            "id": doc_id, "lang": lang, "n": n_chars,
+            "f16": doc_id % 16 + 0.5,
+            "dbl": n_chars + 0.1,
+            "tags": [doc_id % 5, -(doc_id % 7) - 1],
+            "ok": doc_id % 2 == 0})
+        rec = decode(blob)
+        yield (rec["id"], rec["lang"], rec["n"], rec["f16"], rec["dbl"],
+               rec["tags"][0], rec["tags"][1], 1 if rec["ok"] else 0,
+               len(blob))
 
-    return d.select("doc_id", "lang", "n_chars").mapInPandas(
-        roundtrip,
-        schema="doc_id bigint, lang string, n bigint, f16 double, "
-               "dbl double, tag0 bigint, tag1 bigint, ok int, "
-               "nbytes bigint")
+    return row_map(d.select("doc_id", "lang", "n_chars"), roundtrip,
+                   "doc_id bigint, lang string, n bigint, f16 double, "
+                   "dbl double, tag0 bigint, tag1 bigint, ok int, "
+                   "nbytes bigint")
 
 
 # ---------------------------------------------------------------------------
@@ -439,41 +367,28 @@ def q_gif_decode(spark, sf_dir):
     restored every row to its true y; sum_idx alone would match even
     with rows permuted. The comment column pins extension-block
     parsing (and is NULL where the 87a file has none)."""
+    from .operators.gif import decode_gif, encode_gif
+
     d = load_table(spark, sf_dir, "documents")
+    pal = [(10, 20, 5), (50, 50, 30), (90, 80, 55), (130, 110, 80)]
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .operators.gif import decode_gif, encode_gif
-        pal = [(10, 20, 5), (50, 50, 30), (90, 80, 55), (130, 110, 80)]
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [],
-                   "interlaced": [], "n_pixels": [], "sum_idx": [],
-                   "wsum_idx": [], "comment": []}
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = 8 + doc_id % 5, 8 + doc_id % 3
-                inter = doc_id % 2 == 1
-                idx = bytes((x + y * 7 + doc_id) % 4
-                            for y in range(h) for x in range(w))
-                rec = decode_gif(encode_gif(
-                    w, h, pal, idx, interlace=inter,
-                    comment=f"doc-{doc_id}" if inter else None))
-                got = rec["indices"]
-                out["doc_id"].append(doc_id)
-                out["width"].append(rec["width"])
-                out["height"].append(rec["height"])
-                out["interlaced"].append(1 if rec["interlaced"] else 0)
-                out["n_pixels"].append(len(got))
-                out["sum_idx"].append(sum(got))
-                out["wsum_idx"].append(
-                    sum(v * p for p, v in enumerate(got)))
-                out["comment"].append(rec["comment"])
-            yield pd.DataFrame(out)
+    def roundtrip(doc_id):
+        w, h = 8 + doc_id % 5, 8 + doc_id % 3
+        inter = doc_id % 2 == 1
+        idx = bytes((x + y * 7 + doc_id) % 4
+                    for y in range(h) for x in range(w))
+        rec = decode_gif(encode_gif(
+            w, h, pal, idx, interlace=inter,
+            comment=f"doc-{doc_id}" if inter else None))
+        got = rec["indices"]
+        yield (doc_id, rec["width"], rec["height"],
+               1 if rec["interlaced"] else 0, len(got), sum(got),
+               sum(v * p for p, v in enumerate(got)), rec["comment"])
 
-    return d.select("doc_id").mapInPandas(
-        roundtrip,
-        schema="doc_id bigint, width bigint, height bigint, "
-               "interlaced int, n_pixels bigint, sum_idx bigint, "
-               "wsum_idx bigint, comment string")
+    return row_map(d.select("doc_id"), roundtrip,
+                   "doc_id bigint, width bigint, height bigint, "
+                   "interlaced int, n_pixels bigint, sum_idx bigint, "
+                   "wsum_idx bigint, comment string")
 
 
 # ---------------------------------------------------------------------------
@@ -599,19 +514,11 @@ def q_parquet_footer_stats(spark, sf_dir):
         "l_orderkey bigint, l_linenumber int, l_quantity double, "
         "_file_id bigint")
 
-    # write + footer walk fused into ONE task per file (optimization
-    # round r12, guide §1.2 remove redundant actions / §2.5 task
-    # balance): the old shape ran a write-barrier count() job, then a
-    # binaryFile re-scan and a THIRD python stage to parse the footers
-    # — per timed repetition that was one extra job, one extra
-    # full-file read, and one extra python-worker fan-up, and the
-    # driver artifact showed a 1.37 s best / 3.20 s median straggler
-    # spread (VERDICT r11 item 3). Each writer task now re-reads the
-    # PHYSICAL footer of the file it just wrote (pq.read_metadata on
-    # the on-disk bytes — the stats still come from real parquet
-    # footer bytes produced by the controlled write, and at 100 TB
-    # this is exactly stats-collection-at-write locality: the footer
-    # is parsed on the node that holds it). Output rows identical.
+    # write + footer walk in ONE task per file: each writer task
+    # re-reads the PHYSICAL footer of the file it just wrote
+    # (pq.read_metadata on the on-disk bytes), so the stats come from
+    # real parquet footer bytes with no write-barrier job and no
+    # re-scan, parsed on the node that holds the file.
     def _write_slice(key, pdf):
         import pandas as pd
         fid = int(key[0])
@@ -701,41 +608,23 @@ def q_rle_bitpack(spark, sf_dir):
     aggregate, the q_multimodal_decode envelope. At 100 TB this is
     the hot loop of every columnar scan; keeping it correct at the
     byte level is what the framing pin buys."""
-    from typing import Iterator
-
-    import pandas as pd
+    from .operators.rle import rle_bp_decode, rle_bp_encode
 
     d = load_table(spark, sf_dir, "documents")
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .operators.rle import rle_bp_decode, rle_bp_encode
-        for pdf in batches:
-            out = {"doc_id": [], "n_values": [], "n_rle_runs": [],
-                   "nbytes": [], "checksum": []}
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                run_len = 1 + doc_id % 14
-                n = run_len * (10 + doc_id % 5)
-                vals = [(doc_id + i // run_len) % 8 for i in range(n)]
-                blob = rle_bp_encode(vals, 3)
-                got = rle_bp_decode(blob, 3, n)
-                if got != vals:
-                    raise ValueError("rle: roundtrip mismatch")
-                out["doc_id"].append(doc_id)
-                out["n_values"].append(n)
-                out["n_rle_runs"].append(n // run_len
-                                         if run_len >= 8 else 0)
-                out["nbytes"].append(len(blob))
-                out["checksum"].append(
-                    sum((i + 1) * v for i, v in enumerate(vals))
-                    % 1000003)
-            yield pd.DataFrame(out)
+    def roundtrip(doc_id):
+        run_len = 1 + doc_id % 14
+        n = run_len * (10 + doc_id % 5)
+        vals = [(doc_id + i // run_len) % 8 for i in range(n)]
+        blob = rle_bp_encode(vals, 3)
+        if rle_bp_decode(blob, 3, n) != vals:
+            raise ValueError("rle: roundtrip mismatch")
+        yield (doc_id, n, n // run_len if run_len >= 8 else 0, len(blob),
+               sum((i + 1) * v for i, v in enumerate(vals)) % 1000003)
 
-    return (d.select("doc_id").mapInPandas(
-        roundtrip,
-        schema="doc_id bigint, n_values bigint, n_rle_runs bigint, "
-               "nbytes bigint, checksum bigint")
-        .orderBy("doc_id"))
+    return row_map(d.select("doc_id"), roundtrip,
+                   "doc_id bigint, n_values bigint, n_rle_runs bigint, "
+                   "nbytes bigint, checksum bigint").orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -798,35 +687,20 @@ def q_delta_binary_packed(spark, sf_dir):
     over scan-local data, zero shuffle before the doc-keyed
     aggregate; together the two queries cover both Parquet integer
     encodings a 100 TB columnar scan decodes in its inner loop."""
-    from typing import Iterator
-
-    import pandas as pd
+    from .operators.delta_bp import delta_bp_decode, delta_bp_encode
 
     d = load_table(spark, sf_dir, "documents")
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .operators.delta_bp import delta_bp_decode, delta_bp_encode
-        for pdf in batches:
-            out = {"doc_id": [], "n_values": [], "nbytes": [],
-                   "checksum": []}
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                n = 1 + 32 * (3 + doc_id % 6)
-                v0, step = doc_id % 50, 1 + doc_id % 3
-                vals = [v0 + step * i + (i % 2) for i in range(n)]
-                blob = delta_bp_encode(vals)
-                if delta_bp_decode(blob) != vals:
-                    raise ValueError("delta_bp: roundtrip mismatch")
-                out["doc_id"].append(doc_id)
-                out["n_values"].append(n)
-                out["nbytes"].append(len(blob))
-                out["checksum"].append(
-                    sum((i + 1) * v for i, v in enumerate(vals))
-                    % 1000003)
-            yield pd.DataFrame(out)
+    def roundtrip(doc_id):
+        n = 1 + 32 * (3 + doc_id % 6)
+        v0, step = doc_id % 50, 1 + doc_id % 3
+        vals = [v0 + step * i + (i % 2) for i in range(n)]
+        blob = delta_bp_encode(vals)
+        if delta_bp_decode(blob) != vals:
+            raise ValueError("delta_bp: roundtrip mismatch")
+        yield (doc_id, n, len(blob),
+               sum((i + 1) * v for i, v in enumerate(vals)) % 1000003)
 
-    return (d.select("doc_id").mapInPandas(
-        roundtrip,
-        schema="doc_id bigint, n_values bigint, nbytes bigint, "
-               "checksum bigint")
-        .orderBy("doc_id"))
+    return row_map(d.select("doc_id"), roundtrip,
+                   "doc_id bigint, n_values bigint, nbytes bigint, "
+                   "checksum bigint").orderBy("doc_id")

@@ -757,7 +757,7 @@ def q_graph_hits(spark, sf_dir):
     Scale: per half-step one equi-join of the score vector against
     the edge list + a map-side-combined sum, exactly the pagerank
     shape; the L1 normalizer is a 1-row broadcast aggregate. Fixed
-    rounds bound lineage (localCheckpoint every other round)."""
+    rounds bound lineage (localCheckpoint every half-step)."""
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     edges = (o.join(li, o.o_orderkey == li.l_orderkey)
@@ -767,27 +767,30 @@ def q_graph_hits(spark, sf_dir):
     h = (edges.select(F.col("src").alias("node")).distinct()
          .select("node", F.lit(1).cast(_DEC_HA).alias("s")))
 
-    def norm(raw):
+    def pull(score, by, to):
+        """One half-step: each ``to`` endpoint sums the scores of its
+        ``by`` endpoints, then the sums are L1-normalized."""
+        raw = (edges.join(score, score.node == edges[by])
+               .groupBy(F.col(to).alias("node"))
+               .agg(F.sum("s").alias("raw")))
         tot = raw.agg(F.sum("raw").cast("double").alias("t"))
         return (raw.crossJoin(F.broadcast(tot))
                 .select("node",
                         F.round(F.col("raw").cast("double") / F.col("t"),
                                 10).cast(_DEC_HA).alias("s")))
 
-    def _half_steps(state, _):
-        h = state[0]
-        a = norm(edges.join(h, h.node == edges.src)
-                 .groupBy(F.col("dst").alias("node"))
-                 .agg(F.sum("s").alias("raw")))
-        h = norm(edges.join(a, a.node == edges.dst)
-                 .groupBy(F.col("src").alias("node"))
-                 .agg(F.sum("s").alias("raw")))
-        return h, a
+    def half_step(state, i):
+        h, a = state
+        if i % 2 == 0:
+            return h, pull(h, "src", "dst")
+        return pull(a, "dst", "src"), a
 
-    # every second round is materialized; the last of the (odd)
-    # _HITS_ITERS rounds stays lazy inside the output plan
-    h, a = _half_steps(
-        fixpoint((h, None), _half_steps, _HITS_ITERS - 1, every=2), None)
+    # the normalizer reads its half-step's raw sums twice, so every
+    # half-step is materialized: a lazy one would re-run the whole
+    # chain before it in both reads. The last stays lazy in the output
+    # plan.
+    last = 2 * _HITS_ITERS - 1
+    h, a = half_step(fixpoint((h, None), half_step, last), last)
     ranked = (h.select(F.lit("hub").alias("role"), "node", "s")
               .unionByName(a.select(F.lit("authority").alias("role"),
                                     "node", "s")))
